@@ -23,132 +23,6 @@ from mvp_mini_etl_pipeline_1762840347_spark import plans  # noqa: E402
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
-# Names with a GREEN driver CORRECTNESS row in a prior round (r1-r6).
-# The driver oracle-checks queries in dict order and caps the per-round
-# count at ~50, so names never yet green are emitted FIRST; already-green
-# ones re-verify last once everything has had a green row.
-# Source of truth: CORRECTNESS_r{1..6}.json green rows (240 names).
-_DRIVER_CHECKED: tuple[str, ...] = (
-    "metrics_customer", "projection_enrich", "filter_valid",
-    "point_lookup", "case_status", "join_lookup_default",
-    "array_membership_join", "union_all", "tail_limit", "head_limit",
-    "scalar_funcs", "datetime_funcs", "groupby_pricing",
-    "groupby_segment", "window_rank", "window_analytics",
-    "events_tumbling", "events_sliding", "events_session",
-    "events_dedup_first", "events_json_extract", "events_gap_stats",
-    "events_rollup_2level", "events_cohort_retention", "events_funnel",
-    "events_gap_fill", "events_transitions", "events_value_anomaly",
-    "events_trailing_7d", "events_attribution", "events_anomaly_online",
-    "events_session_funnel", "events_view_click_pairs",
-    "events_json_flatten", "session_paths", "events_markov_stationary",
-    "events_watermark_audit", "dedup_exact", "dedup_minhash_lsh",
-    "dedup_simhash", "dedup_ngram_jaccard", "dedup_verified_pairs",
-    "dedup_simhash_hamming", "decontaminate_eval_overlap",
-    "dedup_incremental", "dedup_span_rewrite", "dedup_span_spectrum",
-    "dedup_rewrite_apply", "similarity_topk", "similarity_lsh_bucket",
-    "similarity_ivf", "dedup_embedding_cosine", "embedding_norm_stats",
-    "embedding_label_centroids", "kmeans_2iter", "kmeans_converged",
-    "embedding_centered_norms", "embedding_jl_projection", "pq_codebooks",
-    "pq_encode", "embedding_power_iteration", "similarity_rrf_fusion",
-    "coreset_kcenter", "hard_negative_mining", "label_noise_knn",
-    "text_langid", "text_quality", "text_token_stats", "text_bpe_tokens",
-    "text_fingerprint", "text_inverted_index", "text_tfidf_top_terms",
-    "regex_funcs", "text_repetition", "text_bigram_lm",
-    "text_token_entropy", "text_source_divergence",
-    "text_collocations_pmi", "token_weighted_median_len",
-    "multimodal_meta", "multimodal_checksums", "multimodal_frames",
-    "multimodal_features", "multimodal_decode", "multimodal_resize",
-    "multimodal_pixels", "join_semi", "join_anti", "join_full_outer",
-    "rollup_orders", "cube_pricing", "pivot_status_priority",
-    "setops_custkeys", "percentile_stats", "asof_join",
-    "range_join_bands", "string_funcs", "numeric_funcs",
-    "window_distribution", "grouping_sets_pricing", "array_funcs",
-    "fuzzy_name_match", "join_null_safe", "sort_null_ordering",
-    "unpivot_balances", "window_value_funcs", "top_parts_with_ties",
-    "setops_multiset", "string_agg_nations", "map_funcs",
-    "er_golden_record", "top_unshipped_revenue", "local_supplier_revenue",
-    "top_return_customers", "order_fulfillment", "groupby_salted",
-    "stats_pricing", "promo_revenue_share", "top_supplier",
-    "disjunctive_filter_revenue", "orders_growth", "nation_trade_flow",
-    "customer_rfm", "customer_order_distribution", "regression_price_qty",
-    "nation_revenue_share", "forecast_revenue_change",
-    "priority_shipping_dist", "weighted_price_stats", "market_share",
-    "histogram_totalprice", "zone_map_lineitem", "winsorized_pricing",
-    "winsorized_pricing_approx", "drift_ks_two_sample", "skyline_parts",
-    "orders_running_record", "theil_sen_trend", "exact_median_2pass",
-    "trimmed_mean_exact", "influence_diagnostics", "exact_deciles",
-    "dedup_clusters", "dedup_apply", "pagerank_candidates",
-    "graph_kcore_peel", "small_qty_revenue", "late_ship_priority",
-    "big_volume_customers", "dormant_rich_customers",
-    "sole_late_supplier", "important_parts", "supplier_part_kinds",
-    "promotable_suppliers", "sample_hash_split", "sample_mixture",
-    "dq_checks", "sample_systematic", "sample_stratified",
-    "sample_temperature", "corpus_quality_funnel", "sample_weighted",
-    "table_stats_orders", "corpus_clean_split", "corpus_disposition",
-    "split_temporal_embargo", "groupby_sampled_ci", "mixture_waterfill",
-    "fd_profile", "sketch_kmv_distinct", "sketch_hll_distinct",
-    "sketch_countmin_freq", "sketch_bloom_membership",
-    "sketch_quantile_hist", "sketch_kmv_by_group", "sketch_hll_merge",
-    "join_size_estimate", "topk_certified", "sketch_kmv_intersect",
-    "pack_sequences", "running_corpus_tokens", "pack_sequences_shuffled",
-    "seqlen_histogram", "mv_partial_merge", "mv_join_delta",
-    "cascade_delete_audit", "mv_retraction_agg", "schema_evolution_union",
-    "late_arriving_dim", "outlier_mad", "pii_redaction",
-    "quality_classifier", "scd2_user_state", "merge_upsert_orders",
-    "cdc_snapshot_diff", "snapshot_time_travel", "sql_line_priority",
-    "sketch_kmv_merge", "sketch_countmin_merge", "sketch_quantile_merge",
-    "graph_degree_distribution", "graph_triangle_count",
-    "graph_reachability", "graph_communities_lpa", "hilbert_layout",
-    "weighted_median_delay", "max_concurrent_sessions",
-    "interval_overlap_join", "funnel_conversion_time", "events_ewma",
-    "events_m4_downsample", "attribution_time_decay",
-    "events_pattern_match", "events_dead_letter", "events_exact_p95",
-    "dedup_containment", "dup_span_fraction", "dedup_semantic",
-    "dedup_lsh_recall", "dedup_prefix_filter_join", "dedup_source_matrix",
-    "similarity_recall", "pq_adc_search", "embedding_int8_quant",
-    "centroid_similarity_int8", "similarity_lsh_multiprobe", "token_pmi",
-    "text_bm25_search", "bpe_merge_step", "ngram_novelty",
-    "quality_gopher_rules", "vocab_coverage", "chunk_documents",
-    "bpe_encode_fixed", "text_zipf_slope", "langid_confusion",
-    "vocab_growth_heaps", "join_salted", "er_sorted_neighborhood",
-    "cohort_ltv_triangle",
-    # Round-7 greens (CORRECTNESS_r07.json: 50/50 green, folded r8).
-    "embedding_pca2_deflation", "multimodal_audio_features",
-    "eager_agg_pushdown", "orders_seasonality", "bootstrap_ci",
-    "lorenz_curve_revenue", "order_interarrival",
-    "retention_kaplan_meier", "ab_test_zscore", "cusum_changepoint",
-    "chi_square_independence", "revenue_autocorrelation",
-    "revenue_seasonal_decompose", "drift_psi", "dedup_keep_longest",
-    "min_cost_supplier", "profit_by_nation_year", "sample_token_budget",
-    "split_leakage_free", "sample_neyman", "correlation_profile",
-    "benford_digit_audit", "sketch_join_cardinality",
-    "sketch_kmv_intersection", "join_bloom_pruned", "sketch_hll_sliding",
-    "sketch_hll_cube", "sketch_spacesaving_merge", "pack_sizeclass",
-    "range_partition_bounds", "skew_diagnose", "zorder_layout",
-    "frequent_pairs", "scd2_point_in_time", "bitmap_index_intersect",
-    "encoding_advisor", "partition_advisor", "mv_advisor",
-    "table_fingerprint", "result_cache_serve", "sample_importance",
-    "k_anonymity_audit", "dp_noisy_counts", "release_manifest",
-    "crossval_regression", "classifier_auc", "classifier_calibration",
-    "score_quantile_normalize", "conformal_interval",
-    "training_data_release",
-    # Round-7 stragglers + round-8 registrations (CORRECTNESS_r08.json:
-    # 50/50 green, folded r9).  Registry closed at 301/301 driver-proven.
-    "embedding_prefix_recall", "join_order_advisor",
-    "release_delta", "dedup_threshold_sweep", "ann_recall_vs_probes",
-    "corpus_source_gini", "rolling_median_revenue", "compaction_planner",
-    "cardinality_estimate_audit", "l_diversity_audit", "sample_ess",
-    # Round-9 greens (CORRECTNESS_r09.json: 50/50 green, folded r10).
-    "release_delta_incremental", "runtime_filter_advisor",
-    # Round-10 greens (CORRECTNESS_r10.json: 50/50 green, folded r11).
-    "release_delta_day2", "advisor_report",
-)
-
-
-# No never-checked carryovers remain (registry closed r8); kept for the
-# mechanism — any future entry here is checked first.
-_PRIORITY: tuple[str, ...] = ()
-
 
 def _latest_green_round() -> dict[str, int]:
     """name -> latest round with a green driver CORRECTNESS row.
@@ -191,24 +65,15 @@ def _latest_green_round() -> dict[str, int]:
 
 
 def _coverage_ordered(mapping: dict) -> dict:
-    """Priority, then never-driver-checked (registry order), then the
-    checked bucket STALEST-FIRST (oldest latest-green driver row first,
-    ties broken by registry order).  The driver oracle-checks ~50 names
+    """Stalest first: sort on (latest green driver round, registry
+    position), so never-green or regressed names (round 0) lead and
+    the oldest-verified follow.  The driver oracle-checks ~50 names
     per round in dict order, so this rotation re-proves the longest-
     unverified queries every round."""
     latest = _latest_green_round()
-    priority = {k: mapping[k] for k in _PRIORITY if k in mapping}
-    unchecked = {
-        k: v for k, v in mapping.items()
-        if k not in _DRIVER_CHECKED and k not in priority
-    }
     registry_pos = {k: i for i, k in enumerate(mapping)}
-    checked_names = sorted(
-        (k for k in mapping if k in _DRIVER_CHECKED and k not in priority),
-        key=lambda k: (latest.get(k, 0), registry_pos[k]),
-    )
-    checked = {k: mapping[k] for k in checked_names}
-    return {**priority, **unchecked, **checked}
+    names = sorted(mapping, key=lambda k: (latest.get(k, 0), registry_pos[k]))
+    return {k: mapping[k] for k in names}
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -19,22 +19,25 @@ streaming/jobs.py::fingerprint_stream) already persisted, making
 validation zero-scan.  The cached result itself is parquet -- the
 store is just a directory, safe to vacuum.
 
-Write protocol: result parquet lands in a staging directory first and
-the manifest (the fingerprint key) is written LAST via atomic rename,
-so a crash mid-write leaves garbage that can never validate -- the
-same torn-write discipline as operators/table_format.py.
+Write protocol: the result parquet and the fingerprints it was
+computed from (the ``_FINGERPRINTS`` marker file inside the result
+directory) commit together through operators/table_format.py's
+``_staged_swap`` -- one staging directory, one rename.  No crash can
+pair one input's fingerprints with another input's result, so a hit
+always serves the result of exactly the inputs that validated it.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.warehouse import fingerprint_frame
+from .table_format import _staged_swap
+
+_FINGERPRINTS = "_FINGERPRINTS"
 
 
 def _fingerprints(inputs: dict[str, tuple[DataFrame, tuple]]) -> dict:
@@ -49,10 +52,11 @@ class ResultCache:
     """Directory-backed result cache keyed on input-table content.
 
     ``get_or_compute(name, inputs, compute)`` returns the cached
-    DataFrame when every input fingerprint matches the manifest, else
-    runs ``compute()``, persists its result, and records the
-    fingerprints it was derived from.  ``self.last_hit`` reports the
-    outcome for observability (tests pin it)."""
+    DataFrame when every input fingerprint matches the ones stored
+    with the result, else runs ``compute()`` and commits its result
+    together with the fingerprints it was derived from.
+    ``self.last_hit`` reports the outcome for observability (tests pin
+    it)."""
 
     def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
@@ -60,37 +64,18 @@ class ResultCache:
         self.last_hit: bool | None = None
         os.makedirs(root, exist_ok=True)
 
-    def _paths(self, name: str) -> tuple[str, str]:
-        base = os.path.join(self.root, name)
-        return base + ".parquet", base + ".manifest.json"
-
     def get_or_compute(
         self,
         name: str,
         inputs: dict[str, tuple[DataFrame, tuple]],
         compute,
     ) -> DataFrame:
-        data_path, manifest_path = self._paths(name)
+        data_path = os.path.join(self.root, name + ".parquet")
         key = _fingerprints(inputs)
-        if os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                manifest = json.load(f)
-            if manifest.get("fingerprints") == key and os.path.exists(
-                data_path
-            ):
-                self.last_hit = True
-                return self.spark.read.parquet(data_path)
-        self.last_hit = False
-        result = compute()
-        staging = os.path.join(
-            self.root, f"_staging_{name}_{uuid.uuid4().hex[:8]}"
-        )
-        result.write.mode("overwrite").parquet(staging)
-        if os.path.exists(data_path):
-            shutil.rmtree(data_path)
-        os.rename(staging, data_path)
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"fingerprints": key}, f)
-        os.rename(tmp, manifest_path)  # manifest LAST: the commit point
+
+        def _build(stored: str | None):
+            self.last_hit = stored is not None and json.loads(stored) == key
+            return None if self.last_hit else (compute(), json.dumps(key))
+
+        _staged_swap(data_path, _build, _FINGERPRINTS)
         return self.spark.read.parquet(data_path)

@@ -238,16 +238,14 @@ def compact_small_files(
     Sizing comes from the actual on-disk bytes (file listing), not row
     counts, so skewed row widths still land near the target.  The
     rewrite is one `repartition(n)` pass -- a round-robin shuffle that
-    also heals skewed file sizes -- staged fully into a sibling
-    directory first, then swapped in via two directory renames.  The
-    swap is crash-RECOVERABLE, not atomic: stale staging/backup dirs
-    from a previous crashed run are cleaned up on entry (so a retry
-    always succeeds), a crash mid-swap leaves the data intact in
-    either `path` or `path_precompact` (nothing is deleted until the
-    new copy is live), and a crash between the renames leaves `path`
-    briefly absent -- re-running this function completes the swap.
-    It is NOT a transaction against concurrent access: a reader
-    racing the swap can hit vanished files, and a writer appending
+    also heals skewed file sizes -- committed through
+    operators/table_format.py's `_staged_swap`: staged fully into a
+    sibling directory, then swapped in.  A crash at any step leaves
+    the old files or the new ones (a crash between the swap's two
+    renames is rolled back on the next call, which then compacts
+    again), and nothing is deleted until the new copy is live.  It
+    is NOT a transaction against concurrent access: a reader racing
+    the swap can hit vanished files, and a writer appending
     mid-compaction loses its file.  Where those matter, the same
     rewrite runs under SnapshotTable.commit's pointer swap, which
     readers never race.  Returns {"files_before", "files_after",
@@ -255,7 +253,8 @@ def compact_small_files(
     per partition of a hive layout."""
     import math
     import os
-    import shutil
+
+    from .table_format import _staged_swap
 
     def _parts(p: str) -> list[str]:
         return [
@@ -264,28 +263,20 @@ def compact_small_files(
             if f.endswith(".parquet") and not f.startswith((".", "_"))
         ]
 
-    staged = path.rstrip("/") + "_compacting"
-    old = path.rstrip("/") + "_precompact"
-    # recover from a previous crashed run
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)  # died between the two renames: roll back
-    for stale in (staged, old):
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
+    stats = {}
 
-    before = _parts(path)
-    total = sum(os.path.getsize(f) for f in before)
-    n = max(1, math.ceil(total / target_bytes))
-    spark.read.parquet(path).repartition(n).write.mode("overwrite").parquet(
-        staged
-    )
-    os.rename(path, old)
-    os.rename(staged, path)
-    shutil.rmtree(old)
+    def _build(_):
+        before = _parts(path)
+        total = sum(os.path.getsize(f) for f in before)
+        stats.update(files_before=len(before), bytes=total)
+        n = max(1, math.ceil(total / target_bytes))
+        return spark.read.parquet(path).repartition(n), None
+
+    _staged_swap(path, _build)
     return {
-        "files_before": len(before),
+        "files_before": stats["files_before"],
         "files_after": len(_parts(path)),
-        "bytes": total,
+        "bytes": stats["bytes"],
     }
 
 

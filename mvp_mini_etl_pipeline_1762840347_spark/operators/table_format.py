@@ -1,15 +1,33 @@
-"""Transactional-table stand-in: snapshot directories + an atomic
-current-pointer file (SURVEY §2.8 ST3 restart semantics, ROADMAP
-"plain parquet, no table format").
+"""Transactional-table stand-in and the engine's one commit protocol
+(SURVEY §2.8 ST3 restart semantics, ROADMAP "plain parquet, no table
+format").
 
-This is the minimal slice of what Delta/Iceberg provide that the
-merge operators need: writers never mutate a live directory -- each
-commit lands a fresh ``snapshot-N`` parquet directory and then swaps
-a one-line pointer file via atomic rename, so readers always see a
-complete snapshot (snapshot isolation), a crashed write leaves the
-table untouched (write atomicity), re-running a merge is idempotent
-(same inputs -> same next snapshot content), and any past snapshot
-can be restored by pointer rewrite (time travel / rollback).
+Every state-table write in the package commits through one of two
+primitives defined here, and nowhere else calls ``os.rename`` or
+``os.replace``:
+
+* ``_atomic_write(path, text)`` -- temp file in the same directory,
+  then ``os.replace``.  It publishes every small control file: the
+  ``SnapshotTable``/``SnapshotSet`` pointers, the ``SnapshotSet``
+  manifests and the streaming running-state JSON.
+* ``_staged_swap(path, build, marker)`` -- the commit for tables read
+  as a plain parquet directory (the ``exactly_once_table_merge``
+  state tables, ``compact_small_files``, ``ResultCache``).  The new
+  frame and its marker file land together in one sibling staging
+  directory, which one rename swaps in; a crash between the swap's
+  two renames is recovered on the next call.
+
+The snapshot tables below never rewrite a live directory: each commit
+lands a fresh ``snapshot-N`` parquet directory, with its batch-id
+marker inside, and then swaps a one-line pointer file.  So readers
+always see a complete snapshot (snapshot isolation), a crashed write
+leaves the table untouched (write atomicity), re-running a merge is
+idempotent (same inputs -> same next snapshot content), and any past
+snapshot can be restored by pointer rewrite (time travel / rollback).
+In both primitives data and marker publish in the same atomic step,
+so no crash can leave new data under an old marker (a cache "hit"
+serving another input's result) or old data under a new one (a
+replayed batch skipped, or a committed batch applied twice).
 
 Deploy mapping (documented, not stubbed): on a real lakehouse each
 ``commit`` is ``MERGE INTO target USING updates ON t.key = u.key
@@ -17,18 +35,91 @@ WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *``
 (Delta/Iceberg), and ``restore`` is ``RESTORE TABLE t TO VERSION AS
 OF n`` -- the join plan produced by ``operators.scale.merge_upsert``
 is exactly the join those engines run under the hood.  The pointer
-file here plays the role of the Delta transaction log's latest
-commit / Iceberg's table metadata pointer.
+file plays the role of the Delta transaction log's latest commit /
+Iceberg's table metadata pointer, and the marker carried inside the
+committed directory is Delta's ``txnAppId``/``txnVersion`` (Iceberg's
+WAP id): the batch id that makes a replayed write a no-op.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .scale import merge_upsert
+
+_STAGING = "_staging"
+_BACKUP = "_backup"
+
+
+def _atomic_write(path: str, text: str) -> None:
+    """Publish ``text`` at ``path`` all or nothing: write a temp file in
+    the same directory, then ``os.replace`` it over ``path``.  Rename is
+    atomic within a directory, so a reader sees the old file or the new
+    one, never a partial write; a crash leaves at most a dot-prefixed
+    temp file that no reader opens."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), prefix=".tmp_")
+    with os.fdopen(fd, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
+def _staged_swap(path: str, build, marker: str | None = None) -> bool:
+    """Replace the plain parquet directory ``path`` in one staged swap
+    that publishes the new data and its marker file together.
+
+    1. *Recover*: a crash between the two renames of step 3 left
+       ``path`` missing and ``path + _BACKUP`` holding the last commit,
+       so move it back; then remove any stale staging or backup dir.
+    2. *Stage*: ``build(current)`` gets the text of the live marker
+       file ``marker`` (None if absent or if ``marker`` is None) and
+       returns ``(df, text)`` to commit, or None to commit nothing.
+       ``df`` is written to ``path + _STAGING`` and ``text`` to the
+       marker file INSIDE that directory (underscore-prefixed, so
+       parquet readers ignore it, like ``_SUCCESS``).
+    3. *Swap*: ``path`` -> backup, staging -> ``path`` (the commit
+       point: data and marker publish in this one rename), then drop
+       the backup.
+
+    After step 1 the table is the last commit or the new one, each
+    with its own marker, whichever step a crash hit.  ``build`` may
+    read ``path``: the new frame is fully staged before the old one
+    moves.  Concurrent writers of one ``path`` are not supported (they
+    share the fixed staging directory).  Returns True if it committed.
+    """
+    path = path.rstrip("/")
+    staging, backup = path + _STAGING, path + _BACKUP
+    if not os.path.exists(path) and os.path.exists(backup):
+        os.rename(backup, path)
+    for stale in (staging, backup):
+        if os.path.exists(stale):
+            shutil.rmtree(stale)
+
+    current = None
+    if marker is not None:
+        try:
+            with open(os.path.join(path, marker)) as f:
+                current = f.read()
+        except FileNotFoundError:
+            pass
+    out = build(current)
+    if out is None:
+        return False
+    df, text = out
+    df.write.mode("overwrite").parquet(staging)
+    if marker is not None:
+        with open(os.path.join(staging, marker), "w") as f:
+            f.write(text)
+    if os.path.exists(path):
+        os.rename(path, backup)
+    os.rename(staging, path)
+    if os.path.exists(backup):
+        shutil.rmtree(backup)
+    return True
+
 
 _POINTER = "_CURRENT"
 
@@ -69,13 +160,8 @@ class SnapshotTable:
         return sorted(names, key=lambda n: int(n.split("-", 1)[1]))
 
     def _swap_pointer(self, snapshot: str) -> None:
-        # POSIX rename is atomic within a directory: readers see either
-        # the old pointer or the new one, never a partial write.  (On a
-        # real object store this is the transaction-log append.)
-        fd, tmp = tempfile.mkstemp(dir=self.root, prefix="._ptr_")
-        with os.fdopen(fd, "w") as f:
-            f.write(snapshot + "\n")
-        os.replace(tmp, self._pointer_path())
+        # (On a real object store this is the transaction-log append.)
+        _atomic_write(self._pointer_path(), snapshot + "\n")
 
     # -- table operations ---------------------------------------------------
     def read(self) -> DataFrame:
@@ -97,10 +183,10 @@ class SnapshotTable:
 
         ``marker`` optionally stamps a batch id INSIDE the snapshot
         directory before the pointer swap (underscore-prefixed, so
-        parquet readers ignore it -- the exactly_once_table_merge
-        trick): data and mark publish in one atomic rename, which is
+        parquet readers ignore it -- the same rule as _staged_swap):
+        data and mark publish in one atomic pointer rename, which is
         what lets a replayed streaming batch recognize an
-        already-applied evolution commit (applied_batch)."""
+        already-applied commit (applied_batch)."""
         snaps = self.snapshots()
         nxt = f"snapshot-{int(snaps[-1].split('-', 1)[1]) + 1 if snaps else 0}"
         snap_dir = os.path.join(self.root, nxt)
@@ -143,8 +229,6 @@ class SnapshotTable:
     def vacuum(self, keep_last: int = 2) -> list[str]:
         """Drop all but the newest `keep_last` snapshots (never the
         live one).  Returns the removed names."""
-        import shutil
-
         live = self.current_snapshot()
         removable = [
             n for n in self.snapshots()[:-keep_last] if n != live
@@ -304,16 +388,11 @@ class SnapshotSet:
                 ) as f:
                     f.write(str(marker) + "\n")
         mname = f"manifest-{nxt}"
-        fd, tmp = tempfile.mkstemp(dir=self.root, prefix="._mf_")
-        with os.fdopen(fd, "w") as f:
-            json.dump(
-                {"version": nxt, "batch_id": marker, "tables": tables}, f
-            )
-        os.replace(tmp, os.path.join(self.root, mname))
-        fd, tmp = tempfile.mkstemp(dir=self.root, prefix="._ptr_")
-        with os.fdopen(fd, "w") as f:
-            f.write(mname + "\n")
-        os.replace(tmp, self._pointer_path())  # THE commit point
+        _atomic_write(
+            os.path.join(self.root, mname),
+            json.dumps({"version": nxt, "batch_id": marker, "tables": tables}),
+        )
+        _atomic_write(self._pointer_path(), mname + "\n")  # THE commit point
         self._staged = {}
         self._sync_member_pointers()
         return mname
@@ -353,10 +432,7 @@ class SnapshotSet:
         mname = f"manifest-{version}"
         if version not in self.versions():
             raise FileNotFoundError(f"{mname} does not exist under {self.root}")
-        fd, tmp = tempfile.mkstemp(dir=self.root, prefix="._ptr_")
-        with os.fdopen(fd, "w") as f:
-            f.write(mname + "\n")
-        os.replace(tmp, self._pointer_path())
+        _atomic_write(self._pointer_path(), mname + "\n")
         self._sync_member_pointers()
 
     # -- maintenance --------------------------------------------------------
@@ -368,8 +444,6 @@ class SnapshotSet:
         attempts (but never this instance's pending stage).  Returns
         {table: [removed snapshot names]} plus dropped manifests under
         the ``_manifests`` key."""
-        import shutil
-
         vers = self.versions()
         live = self.version()
         keep_vers = set(vers[-keep_last:] if keep_last > 0 else [])

@@ -2292,9 +2292,10 @@ def result_cache_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The content-addressed result cache, value-checked end to end:
     the per-priority revenue rollup is requested TWICE through
     operators/result_cache.py::ResultCache.  The first call misses
-    (no manifest), computes, and persists result + input fingerprints;
-    the second call validates the orders table's content fingerprint
-    against the manifest and serves the PERSISTED parquet without
+    (nothing stored), computes, and commits result + input
+    fingerprints together; the second call validates the orders
+    table's content fingerprint against the stored one and serves the
+    PERSISTED parquet without
     re-running the aggregate.  The returned rows are the served (hit)
     frame plus the observed hit/miss flags, so a cache that serves
     stale bytes, fails to hit on identical content, or "hits" without

@@ -532,16 +532,13 @@ def hourly_rollup_stream(
     reads as "first batch" -- any other read failure (corrupt footer,
     transient IO) re-raises and aborts the batch, because treating it
     as absence would silently reset the accumulated table to one
-    delta; (2) a batch-id high-water mark file makes replayed batches
-    (foreachBatch is at-least-once across restarts) no-ops instead of
-    double-counts; (3) the merged table is staged into a sibling
-    directory and swapped in via recoverable renames, so the merge
-    plan never overwrites its own parquet source mid-read (no cache
-    barrier to evict).  One residual window remains -- a crash after
-    the swap but before the mark write re-applies that one delta on
-    replay; closing it needs the data+mark atomic commit of
-    snapshot_merge_step / SnapshotTable below, which is the deploy
-    path."""
+    delta; (2) a batch-id mark makes replayed batches (foreachBatch
+    is at-least-once across restarts) no-ops instead of double-counts;
+    (3) the merged table and its mark are staged into a sibling
+    directory and swapped in by one recoverable rename
+    (exactly_once_table_merge), so the merge plan never overwrites its
+    own parquet source mid-read and no crash separates data from
+    mark."""
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         hourly_rollup_merge_step(spark, batch_df, batch_id, hourly_path)
@@ -576,56 +573,33 @@ def exactly_once_table_merge(
       the plan reads ``path`` itself, so an in-place overwrite could
       recompute from a half-deleted source;
     * the commit point is ATOMIC: the applied batch id travels INSIDE
-      the staged directory (``_BATCH_ID``, underscore-prefixed so
-      parquet readers ignore it, like ``_SUCCESS``), so the single
-      directory rename publishes data and mark together -- there is
-      no window where the merge landed but the mark did not (a
-      separate mark file written after the swap would double-apply on
-      a crash between the two);
+      the staged directory (``_BATCH_ID``), so one directory rename
+      publishes data and mark together -- no crash can leave the merge
+      landed but the mark not (a double-apply on replay);
     * a crash between the two swap renames is recovered on the next
       call (the pre-merge table is restored, the batch re-runs).
 
+    The staging, marker and swap are operators/table_format.py's
+    ``_staged_swap``; this function only adds the replay guard.
     Returns True if the batch was applied, False for a replay no-op.
     """
     import os
-    import shutil
 
-    staged = path.rstrip("/") + "_staging"
-    old = path.rstrip("/") + "_premerge"
-    # recover a crash between the two swap renames, then clear
-    # stale dirs from any earlier crashed attempt
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-    for stale in (staged, old):
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
+    from ..operators.table_format import _staged_swap
 
-    marker = os.path.join(path, "_BATCH_ID")
-    try:
-        with open(marker) as f:
-            applied = int(f.read().strip())
-    except (FileNotFoundError, ValueError):
-        applied = -1
-    if batch_id <= applied:
-        return False  # replayed batch: already merged, exactly-once no-op
+    def _build(current: str | None):
+        try:
+            applied = int(current.strip()) if current is not None else -1
+        except ValueError:
+            applied = -1
+        if batch_id <= applied:
+            return None  # replayed batch: already merged, exactly-once no-op
+        # only explicit absence means "first batch"; a corrupt/unreadable
+        # table must abort the batch, not silently reset the state
+        target = spark.read.parquet(path) if os.path.exists(path) else None
+        return merge_fn(target), str(batch_id)
 
-    # only explicit absence means "first batch"; a corrupt/unreadable
-    # table must abort the batch, not silently reset the state
-    if os.path.exists(path):
-        target = spark.read.parquet(path)  # IO errors re-raise
-    else:
-        target = None
-    merged = merge_fn(target)
-
-    merged.write.mode("overwrite").parquet(staged)
-    with open(os.path.join(staged, "_BATCH_ID"), "w") as f:
-        f.write(str(batch_id))
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(staged, path)  # atomic commit: data + batch id together
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    return True
+    return _staged_swap(path, _build, "_BATCH_ID")
 
 
 def hourly_rollup_merge_step(
@@ -815,9 +789,9 @@ def running_tokens_step(
     running_tokens_stream, exposed for direct replay testing).
     Returns True if applied, False for a replayed no-op."""
     import json
-    import os
 
     from ..operators.prefix import exclusive_cumsum
+    from ..operators.table_format import _atomic_write
 
     state_path = out_path.rstrip("/") + "_STATE"
     try:
@@ -849,9 +823,9 @@ def running_tokens_step(
     # the last doc's inclusive total IS offset + batch token sum
     m = spark.read.parquet(out_dir).agg(F.max("running_total")).first()[0]
     new_offset = int(m) if m is not None else state["offset"]
-    with open(state_path + ".tmp", "w") as f:
-        json.dump({"batch_id": batch_id, "offset": new_offset}, f)
-    os.replace(state_path + ".tmp", state_path)
+    _atomic_write(
+        state_path, json.dumps({"batch_id": batch_id, "offset": new_offset})
+    )
     return True
 
 
@@ -902,8 +876,8 @@ def merge_stream_into_snapshot_table(
 ) -> StreamingQuery:
     """Transactional streaming merge: every micro-batch's per-user
     aggregate deltas are merged into a SnapshotTable
-    (operators/table_format.py) as ONE atomic snapshot commit, with a
-    batch-id high-water mark making retried batches no-ops.
+    (operators/table_format.py) as ONE atomic snapshot commit whose
+    batch-id marker makes retried batches no-ops.
 
     foreachBatch alone is at-least-once across failures (a batch can
     re-run after a crash between sink write and checkpoint commit);
@@ -929,19 +903,14 @@ def merge_stream_into_snapshot_table(
 
 def snapshot_merge_step(table, batch_df: DataFrame, batch_id: int) -> bool:
     """One exactly-once merge step (the foreachBatch body, exposed for
-    direct retry testing): skip if batch_id is at or below the
-    committed high-water mark, else additively merge the batch's
-    per-user deltas and commit one snapshot + advance the mark.
-    Returns True if the batch was applied, False if skipped."""
-    import os
-
-    hw_path = os.path.join(table.root, "_LAST_BATCH")
-    try:
-        with open(hw_path) as f:
-            applied = int(f.read().strip())
-    except (FileNotFoundError, ValueError):
-        applied = -1
-    if batch_id <= applied:
+    direct retry testing): skip if batch_id is at or below the batch
+    id marked in the live snapshot, else additively merge the batch's
+    per-user deltas and commit one snapshot carrying the new mark --
+    data and mark publish in the same pointer swap, so no crash can
+    apply a batch twice.  Returns True if the batch was applied,
+    False if skipped."""
+    applied = table.applied_batch()
+    if applied is not None and batch_id <= applied:
         return False  # retried batch: already committed, exactly-once no-op
     delta = batch_df.groupBy("user_id").agg(
         F.count("*").alias("n_events"),
@@ -968,10 +937,7 @@ def snapshot_merge_step(table, batch_df: DataFrame, batch_id: int) -> bool:
     # commit() writes the new snapshot BEFORE swapping the pointer, so
     # the read above never races its own overwrite (unlike the plain-
     # parquet variant, no cache barrier needed).
-    table.commit(merged)
-    with open(hw_path + ".tmp", "w") as f:
-        f.write(str(batch_id))
-    os.replace(hw_path + ".tmp", hw_path)
+    table.commit(merged, marker=batch_id)
     return True
 
 

@@ -59,17 +59,20 @@ def test_registry_size_matches_coverage_doc():
 
 def test_never_driver_checked_queries_come_first():
     """The external driver oracle-checks a bounded prefix of queries()
-    per round; names without a past green CORRECTNESS row must precede
-    every previously-checked name so coverage extends each round."""
+    per round; the order is stalest-first on (latest green driver
+    round, registry position), so names without a green CORRECTNESS
+    row (round 0) precede every previously-checked name and coverage
+    extends each round."""
+    from mvp_mini_etl_pipeline_1762840347_spark import plans
+
     names = list(entrymod.queries())
-    checked = set(entrymod._DRIVER_CHECKED)
-    assert checked <= set(names), checked - set(names)
-    seen_checked = False
-    for n in names:
-        if n in checked:
-            seen_checked = True
-        else:
-            assert not seen_checked, f"unchecked {n!r} after a checked name"
+    assert sorted(names) == sorted(plans.QUERIES)
+    latest = entrymod._latest_green_round()
+    registry_pos = {k: i for i, k in enumerate(plans.QUERIES)}
+    keys = [(latest.get(n, 0), registry_pos[n]) for n in names]
+    assert keys == sorted(keys), "queries() is not stalest-first"
+    never_green = [n for n in names if latest.get(n, 0) == 0]
+    assert names[: len(never_green)] == never_green
     # the same ordering applies to the oracle dict
     assert [n for n in names if n in entrymod.oracle_sql()] == list(
         entrymod.oracle_sql()

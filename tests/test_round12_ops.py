@@ -2,9 +2,11 @@
 aggregation rewrites, exercised on synthetic frames that include the
 NULL cases the parquet fixtures never produce.
 
-* fd_profile replaced per-key count(DISTINCT dep) with a min/max pair
-  (ndep > 1  <=>  min != max over non-null values); the pin checks the
-  two forms agree on every null pattern, including all-NULL keys.
+* fd_profile's rewrite of per-key count(DISTINCT dep) as a min/max
+  pair (ndep > 1  <=>  min != max over non-null values) was evaluated
+  (and reverted: it planned as SortAggregate and ran slower); the pin
+  keeps the exactness argument, checking the two forms agree on every
+  null pattern, including all-NULL keys.
 * mv_advisor replaced SELECT-DISTINCT-then-count with
   countDistinct(struct(keys)); the pin checks struct-distinct counts
   null key values exactly like DataFrame.distinct().

@@ -409,8 +409,13 @@ def test_compact_small_files(spark, tmp_path):
     ).collect()[0]["s"]
     assert got_sum == want_sum
     # no staging residue
-    assert not os.path.exists(path + "_compacting")
-    assert not os.path.exists(path + "_precompact")
+    from mvp_mini_etl_pipeline_1762840347_spark.operators.table_format import (
+        _BACKUP,
+        _STAGING,
+    )
+
+    assert not os.path.exists(path + _STAGING)
+    assert not os.path.exists(path + _BACKUP)
 
 
 # ---------------------------------------------------------------------------

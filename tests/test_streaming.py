@@ -605,9 +605,7 @@ def test_snapshot_table_stream_merge_exactly_once(
     # Retry semantics: re-applying the last committed batch_id must be
     # a no-op (no new snapshot, table content unchanged) -- the
     # foreachBatch crash-replay scenario.
-    import os
-
-    last = int(open(os.path.join(root, "_LAST_BATCH")).read())
+    last = table.applied_batch()
     n_before = len(table.snapshots())
     replay = spark.read.parquet(f"{sf_dir}/events.parquet")
     applied = jobs.snapshot_merge_step(table, replay, last)
@@ -841,8 +839,12 @@ def test_scd2_stream_current_state_matches_batch(
         == 0
     )
 
-    # crash between the two swap renames: path gone, _premerge left
-    os.rename(dim_path, dim_path + "_premerge")
+    # crash between the two swap renames: path gone, backup left
+    from mvp_mini_etl_pipeline_1762840347_spark.operators.table_format import (
+        _BACKUP,
+    )
+
+    os.rename(dim_path, dim_path + _BACKUP)
     assert jobs.scd2_merge_step(spark, b1, 2, dim_path) is True
     cur2 = {
         r["user_id"]: r["event_type"]
