@@ -18,6 +18,9 @@ NOT ``id(spark)``, which CPython reuses after GC, so a new session
 allocated at a stopped session's address could be served checkpointed
 frames bound to the dead context (ADVICE r9).
 
+``fan_out`` is the one concurrent runner the plans use to overlap
+independent fragment fills and staging writes.
+
 ``HITS``/``MISSES`` count cache decisions so bench.py can record, per
 query, whether the committed timing was served from a cached fragment
 (the artifact-honesty flag ADVICE r9 asked for).
@@ -26,11 +29,16 @@ query, whether the committed timing was served from a cached fragment
 from __future__ import annotations
 
 import os
-from typing import Callable
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
 _FRAGMENT_CACHE: dict[tuple, object] = {}
+
+# fan_out's pool size: overlaps short jobs without flooding the scheduler
+_FAN_OUT_WORKERS = 4
+
+T = TypeVar("T")
 
 # Monotone counters, incremented on every cache decision (hit/miss)
 # regardless of which fragment it was.  bench.py snapshots HITS around
@@ -95,8 +103,8 @@ def cached_frame(
 
     ALWAYS-ON input-state memos (e.g. "yesterday's committed curation
     stores exist" -- dict-valued, not a single frame) do not fit this
-    helper; they write _FRAGMENT_CACHE directly (see
-    quality._curation_state) and call note_hit/note_miss themselves.
+    helper; they go through quality._memo_state, the one other writer
+    of _FRAGMENT_CACHE.
     """
     if not fragment_cache_on():
         return build()
@@ -109,3 +117,23 @@ def cached_frame(
     out = build().localCheckpoint()
     _FRAGMENT_CACHE[key] = out
     return out
+
+
+def fan_out(calls: dict[str, Callable[[], T]]) -> dict[str, T]:
+    """Run independent driver-side actions (fragment fills, staged
+    table writes) concurrently, so one short job's tail does not idle
+    the cores while the driver starts the next; return results by name
+    in ``calls`` order.  Every member finishes before this returns or
+    raises; the first failure in ``calls`` order is re-raised with its
+    own type, noted with the member's name.  Members must use distinct
+    cache keys and directories: nothing here serializes them."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=_FAN_OUT_WORKERS) as pool:
+        futs = {name: pool.submit(call) for name, call in calls.items()}
+    for name, fut in futs.items():
+        exc = fut.exception()
+        if exc is not None:
+            exc.add_note(f"fan_out member {name!r}")
+            raise exc
+    return {name: fut.result() for name, fut in futs.items()}

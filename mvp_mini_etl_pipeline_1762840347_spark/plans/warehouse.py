@@ -3106,7 +3106,9 @@ def advisor_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     SPARK_GRAFT_FRAGMENT_CACHE=1 (bench) the assembled report is the
     cached fragment (one maintenance readout per batch window);
     parity cache-on == cache-off pinned in tests/test_round10_ops.py."""
-    from .fragments import cached_frame, fragment_cache_on
+    from functools import partial
+
+    from .fragments import cached_frame, fan_out, fragment_cache_on
 
     def _build() -> DataFrame:
         if fragment_cache_on():
@@ -3115,11 +3117,9 @@ def advisor_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             # statistics passes over different tables, and each one is
             # a short job whose tail would otherwise leave the cores
             # idle while the next build waits on the driver).  Each
-            # thread fills a DIFFERENT fragment key, so the per-process
+            # member fills a DIFFERENT fragment key, so the per-process
             # cache sees no key contention; with the cache off the
             # standalone plan below is returned unchanged.
-            from concurrent.futures import ThreadPoolExecutor
-
             advisors = (
                 encoding_advisor,
                 partition_advisor,
@@ -3129,8 +3129,7 @@ def advisor_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 compaction_planner,
                 cardinality_estimate_audit,
             )
-            with ThreadPoolExecutor(max_workers=4) as pool:
-                list(pool.map(lambda f: f(spark, sf_dir), advisors))
+            fan_out({f.__name__: partial(f, spark, sf_dir) for f in advisors})
         return _advisor_report_build(spark, sf_dir)
 
     return cached_frame(spark, ("advisor_report", sf_dir), _build)

@@ -163,6 +163,26 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str = "append") -> Stre
     return q
 
 
+def _drive(stream: DataFrame, checkpoint: str, step) -> StreamingQuery:
+    """Start ``step(batch_df, batch_id)`` as a foreachBatch sink over
+    all input available now (``availableNow`` trigger), with offsets and
+    commits kept under ``checkpoint`` -- the one starter every ``*_stream``
+    twin below returns.  Stateful twins pass ``<state path>_chk`` as the
+    checkpoint; the explicit ``checkpoint_dir`` twins pass theirs.
+
+    ``step`` must resolve its merge step by module name when a batch
+    arrives (a closure or lambda calling ``hourly_rollup_merge_step``,
+    not the function object bound at start): perfbench/tracing.py swaps
+    ``hourly_rollup_merge_step`` and ``snapshot_merge_step`` on this
+    module to count ``streaming.batches``."""
+    return (
+        stream.writeStream.foreachBatch(step)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+
+
 def merge_stream_into_parquet(
     spark: SparkSession, events: DataFrame, target_path: str
 ) -> StreamingQuery:
@@ -210,12 +230,7 @@ def merge_stream_into_parquet(
 
         exactly_once_table_merge(spark, target_path, batch_id, _merge)
 
-    return (
-        events.writeStream.foreachBatch(_step)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", target_path + "_chk")
-        .start()
-    )
+    return _drive(events, target_path + "_chk", _step)
 
 
 def funnel_stream(events: DataFrame) -> DataFrame:
@@ -445,12 +460,7 @@ def incremental_dedup_stream(
             lambda t: new_sigs if t is None else t.unionByName(new_sigs),
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drive(docs_stream, checkpoint_dir, _step)
 
 
 def span_rewrite_stream(
@@ -508,12 +518,7 @@ def span_rewrite_stream(
             lambda t: novel if t is None else t.unionByName(novel),
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drive(docs_stream, checkpoint_dir, _step)
 
 
 def hourly_rollup_stream(
@@ -540,14 +545,9 @@ def hourly_rollup_stream(
     own parquet source mid-read and no crash separates data from
     mark."""
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        hourly_rollup_merge_step(spark, batch_df, batch_id, hourly_path)
-
-    return (
-        events.writeStream.foreachBatch(_merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", hourly_path + "_chk")
-        .start()
+    return _drive(
+        events, hourly_path + "_chk",
+        lambda df, bid: hourly_rollup_merge_step(spark, df, bid, hourly_path),
     )
 
 
@@ -661,14 +661,9 @@ def hll_rollup_stream(
     the high-water mark here only saves work.  Same staged-swap merge
     discipline as hourly_rollup_merge_step."""
 
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        hll_rollup_merge_step(spark, batch_df, batch_id, regs_path)
-
-    return (
-        events.writeStream.foreachBatch(_step)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", regs_path + "_chk")
-        .start()
+    return _drive(
+        events, regs_path + "_chk",
+        lambda df, bid: hll_rollup_merge_step(spark, df, bid, regs_path),
     )
 
 
@@ -744,12 +739,7 @@ def decontaminate_stream(
             "overwrite"
         ).parquet(f"{out_path}/batch={batch_id}")
 
-    return (
-        docs_stream.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drive(docs_stream, checkpoint_dir, _step)
 
 
 def running_tokens_stream(
@@ -771,14 +761,9 @@ def running_tokens_stream(
     batch_id is a no-op (a crash between output and state write
     replays with the same offset, rewriting identical rows)."""
 
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        running_tokens_step(spark, batch_df, batch_id, out_path)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_step)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", out_path + "_chk")
-        .start()
+    return _drive(
+        docs_stream, out_path + "_chk",
+        lambda df, bid: running_tokens_step(spark, df, bid, out_path),
     )
 
 
@@ -890,14 +875,9 @@ def merge_stream_into_snapshot_table(
 
     table = SnapshotTable(spark, table_root)
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        snapshot_merge_step(table, batch_df, batch_id)
-
-    return (
-        events.writeStream.foreachBatch(_merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", table_root + "_chk")
-        .start()
+    return _drive(
+        events, table_root + "_chk",
+        lambda df, bid: snapshot_merge_step(table, df, bid),
     )
 
 
@@ -1081,14 +1061,9 @@ def scd2_stream(
     join; at deploy scale the dimension is bucketed on the key and
     only touched partitions rewrite."""
 
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        scd2_merge_step(spark, batch_df, batch_id, dim_path)
-
-    return (
-        events.writeStream.foreachBatch(_step)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", dim_path + "_chk")
-        .start()
+    return _drive(
+        events, dim_path + "_chk",
+        lambda df, bid: scd2_merge_step(spark, df, bid, dim_path),
     )
 
 
@@ -1209,14 +1184,9 @@ def m4_stream(
     batch-id replay guard and staged-swap publish as every state
     table here."""
 
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        m4_merge_step(spark, batch_df, batch_id, path)
-
-    return (
-        events.writeStream.foreachBatch(_step)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", path + "_chk")
-        .start()
+    return _drive(
+        events, path + "_chk",
+        lambda df, bid: m4_merge_step(spark, df, bid, path),
     )
 
 
@@ -1299,14 +1269,9 @@ def bitmap_index_stream(
     the word table) stay queryable without ever rescanning the event
     history -- raw events are read once, ever."""
 
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        bitmap_merge_step(spark, batch_df, batch_id, path)
-
-    return (
-        events.writeStream.foreachBatch(_step)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", path + "_chk")
-        .start()
+    return _drive(
+        events, path + "_chk",
+        lambda df, bid: bitmap_merge_step(spark, df, bid, path),
     )
 
 
@@ -1395,14 +1360,9 @@ def auc_stream(
     scorecard stays current without rescanning the corpus -- the
     shape every continuously-evaluated quality classifier needs."""
 
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        auc_merge_step(spark, batch_df, batch_id, path)
-
-    return (
-        docs.writeStream.foreachBatch(_step)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", path + "_chk")
-        .start()
+    return _drive(
+        docs, path + "_chk",
+        lambda df, bid: auc_merge_step(spark, df, bid, path),
     )
 
 
@@ -1474,14 +1434,9 @@ def psi_drift_stream(
     high-water mark; parity with the batch frame over the same rows
     is pinned in tests."""
 
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        psi_drift_merge_step(spark, batch_df, batch_id, counts_path)
-
-    return (
-        events.writeStream.foreachBatch(_step)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", counts_path + "_chk")
-        .start()
+    return _drive(
+        events, counts_path + "_chk",
+        lambda df, bid: psi_drift_merge_step(spark, df, bid, counts_path),
     )
 
 
@@ -1536,14 +1491,9 @@ def ks_drift_stream(
     the shared batch-id high-water mark; parity with the batch query
     over the same rows is pinned in tests."""
 
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        ks_drift_merge_step(spark, batch_df, batch_id, counts_path)
-
-    return (
-        docs.writeStream.foreachBatch(_step)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", counts_path + "_chk")
-        .start()
+    return _drive(
+        docs, counts_path + "_chk",
+        lambda df, bid: ks_drift_merge_step(spark, df, bid, counts_path),
     )
 
 
@@ -1662,14 +1612,9 @@ def zset_mv_stream(
     query (mv_retraction_agg) over an equivalent changelog is pinned
     in tests."""
 
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        zset_mv_merge_step(spark, batch_df, batch_id, mv_path)
-
-    return (
-        deltas.writeStream.foreachBatch(_step)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", mv_path + "_chk")
-        .start()
+    return _drive(
+        deltas, mv_path + "_chk",
+        lambda df, bid: zset_mv_merge_step(spark, df, bid, mv_path),
     )
 
 
@@ -1731,14 +1676,9 @@ def waterfill_stream(
     far" -- never rescanning document history.  Exactly-once via the
     shared batch-id high-water mark."""
 
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        waterfill_merge_step(spark, batch_df, batch_id, state_path)
-
-    return (
-        docs.writeStream.foreachBatch(_step)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", state_path + "_chk")
-        .start()
+    return _drive(
+        docs, state_path + "_chk",
+        lambda df, bid: waterfill_merge_step(spark, df, bid, state_path),
     )
 
 
@@ -1795,14 +1735,9 @@ def fingerprint_stream(
     shared batch-id high-water mark (the merge is additive, not
     idempotent -- the replay guard is load-bearing here)."""
 
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        fingerprint_merge_step(spark, batch_df, batch_id, state_path)
-
-    return (
-        docs.writeStream.foreachBatch(_step)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", state_path + "_chk")
-        .start()
+    return _drive(
+        docs, state_path + "_chk",
+        lambda df, bid: fingerprint_merge_step(spark, df, bid, state_path),
     )
 
 
@@ -1872,12 +1807,7 @@ def spacesaving_stream(
             batch_df.sparkSession, batch_df, batch_id, summary_path, err_path
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(_step)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _drive(docs_stream, checkpoint_dir, _step)
 
 
 # ---------------------------------------------------------------------------
@@ -1951,14 +1881,9 @@ def release_manifest_stream(
     and a replica/rebuild check is a per-source fingerprint compare.
     Exactly-once via the shared atomic staged-swap merge."""
 
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        release_manifest_merge_step(spark, batch_df, batch_id, state_path)
-
-    return (
-        docs.writeStream.foreachBatch(_step)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", state_path + "_chk")
-        .start()
+    return _drive(
+        docs, state_path + "_chk",
+        lambda df, bid: release_manifest_merge_step(spark, df, bid, state_path),
     )
 
 
@@ -2048,14 +1973,9 @@ def release_delta_stream(
     v2's manifest against v1 is a zero-scan read of this table).
     Exactly-once via the shared atomic staged-swap merge."""
 
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        release_delta_merge_step(spark, batch_df, batch_id, state_path)
-
-    return (
-        changes.writeStream.foreachBatch(_step)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", state_path + "_chk")
-        .start()
+    return _drive(
+        changes, state_path + "_chk",
+        lambda df, bid: release_delta_merge_step(spark, df, bid, state_path),
     )
 
 
@@ -2184,9 +2104,4 @@ def release_delta_incremental_stream(
             spark, batch_df, batch_id, box, removed_of
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(_step)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _drive(docs_stream, checkpoint_dir, _step)

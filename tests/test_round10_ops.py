@@ -405,6 +405,38 @@ def test_advisor_report_cache_parity_and_consistency(spark):
         assert metric == float(want["pruned_ppm"])
 
 
+def test_fan_out_failure_names_member_after_all_finish():
+    """fan_out (advisor_report's prefill and the store staging writes)
+    re-raises a member's failure with its own type, noted with the
+    member's name, and only after every other member has finished."""
+    import time
+
+    import pytest
+
+    from mvp_mini_etl_pipeline_1762840347_spark.plans.fragments import fan_out
+
+    done: list[str] = []
+
+    def ok(name: str, delay: float):
+        def call() -> str:
+            time.sleep(delay)
+            done.append(name)
+            return name
+
+        return call
+
+    def fail() -> str:
+        raise ValueError("stats pass failed")
+
+    with pytest.raises(ValueError, match="stats pass failed") as info:
+        fan_out({"first": ok("first", 0.0), "middle": fail,
+                 "last": ok("last", 0.3)})
+    assert type(info.value) is ValueError
+    assert "fan_out member 'middle'" in info.value.__notes__
+    assert sorted(done) == ["first", "last"]
+    assert fan_out({"a": ok("a", 0.0), "b": ok("b", 0.0)}) == {"a": "a", "b": "b"}
+
+
 def test_day2_evolved_equals_day2_rebuilt(spark):
     """End-to-end: the registered day-2 query (evolved state) returns
     the same rows as the identical pass against a rebuilt v1.5 state

@@ -935,16 +935,37 @@ def test_hygiene_stream_matches_batch(spark, sf_dir, tmp_path_factory):
     assert any(v[4] for v in got.values()), "everything rejected"
 
 
+def _stream_two_batches(spark, base, b0, b1, open_stream, start):
+    """Land ``b0`` and ``b1`` as two files, replay them through the
+    ``start(spark, stream, path)`` twin with availableNow, one file per
+    micro-batch, and return the streamed state's path after checking
+    both batches reached ``<path>_chk/offsets``."""
+    import os
+
+    landing = str(base / "landing")
+    b0.coalesce(1).write.parquet(landing, mode="overwrite")
+    b1.coalesce(1).write.parquet(landing, mode="append")
+    path = str(base / "streamed")
+    q = start(spark, open_stream(spark, landing, max_files_per_trigger=1), path)
+    q.awaitTermination(120)
+    offsets = path + "_chk/offsets"
+    assert os.path.isdir(offsets)
+    assert len([f for f in os.listdir(offsets) if not f.startswith(".")]) >= 2
+    return path
+
+
 def test_m4_stream_merged_state_matches_batch_and_rendered_form(
     spark, sf_dir, tmp_path_factory
 ):
     """Two-batch incremental M4 maintenance == one-shot state over
     all events (backfill == live), the merged state renders exactly
-    events_m4_downsample's answer, and a replayed batch is a no-op."""
+    events_m4_downsample's answer, a replayed batch is a no-op, and
+    the m4_stream twin over the same two batches lands the same state."""
     from mvp_mini_etl_pipeline_1762840347_spark.io import read_events
     from mvp_mini_etl_pipeline_1762840347_spark.plans import QUERIES
 
-    path = str(tmp_path_factory.mktemp("m4") / "state")
+    base = tmp_path_factory.mktemp("m4")
+    path = str(base / "state")
     ev = read_events(spark, sf_dir)
     b0 = ev.filter(F.col("event_id") % 2 == 0)
     b1 = ev.filter(F.col("event_id") % 2 == 1)
@@ -967,6 +988,10 @@ def test_m4_stream_merged_state_matches_batch_and_rendered_form(
     merged = state_map(spark.read.parquet(path))
     oneshot = state_map(jobs.m4_state(ev))
     assert merged == oneshot
+    streamed = _stream_two_batches(
+        spark, base, b0, b1, jobs.stream_events, jobs.m4_stream
+    )
+    assert state_map(spark.read.parquet(streamed)) == merged
     rendered = {
         str(r["bucket"]): (
             r["n_points"], r["v_min"], r["v_max"], r["v_first"], r["v_last"]
@@ -981,11 +1006,13 @@ def test_bitmap_stream_merged_index_matches_oneshot_and_direct_counts(
 ):
     """Two-batch incremental bitmap-index maintenance == one-shot
     build over all events (OR-merge is order-free), popcount of the
-    merged AND equals the direct predicate count, and a replayed
-    batch is a no-op."""
+    merged AND equals the direct predicate count, a replayed batch is
+    a no-op, and the bitmap_index_stream twin over the same two
+    batches lands the same index."""
     from mvp_mini_etl_pipeline_1762840347_spark.io import read_events
 
-    path = str(tmp_path_factory.mktemp("bm") / "index")
+    base = tmp_path_factory.mktemp("bm")
+    path = str(base / "index")
     ev = read_events(spark, sf_dir)
     b0 = ev.filter(F.col("event_id") % 2 == 0)
     b1 = ev.filter(F.col("event_id") % 2 == 1)
@@ -999,6 +1026,10 @@ def test_bitmap_stream_merged_index_matches_oneshot_and_direct_counts(
     merged = index_map(spark.read.parquet(path))
     oneshot = index_map(jobs.bitmap_state(ev))
     assert merged == oneshot
+    streamed = _stream_two_batches(
+        spark, base, b0, b1, jobs.stream_events, jobs.bitmap_index_stream
+    )
+    assert index_map(spark.read.parquet(streamed)) == merged
 
     n_and = (
         spark.read.parquet(path)
@@ -1020,11 +1051,13 @@ def test_auc_stream_merged_state_renders_batch_scorecard(
 ):
     """Two-batch incremental AUC maintenance == the batch
     classifier_auc scorecard (additive marginals make the rank metric
-    incrementally maintainable), and a replayed batch is a no-op."""
+    incrementally maintainable), a replayed batch is a no-op, and the
+    auc_stream twin over the same two batches lands the same state."""
     from mvp_mini_etl_pipeline_1762840347_spark.io import read_table
     from mvp_mini_etl_pipeline_1762840347_spark.plans import QUERIES
 
-    path = str(tmp_path_factory.mktemp("auc") / "state")
+    base = tmp_path_factory.mktemp("auc")
+    path = str(base / "state")
     d = read_table(spark, sf_dir, "documents")
     b0 = d.filter(F.col("doc_id") % 2 == 0)
     b1 = d.filter(F.col("doc_id") % 2 == 1)
@@ -1037,6 +1070,16 @@ def test_auc_stream_merged_state_renders_batch_scorecard(
     assert got["auc"] == want["auc"]
     assert got["n_pos"] == want["n_pos"]
     assert got["n_neg"] == want["n_neg"]
+
+    def state_map(df):
+        return {r["score"]: (r["p"], r["q"]) for r in df.collect()}
+
+    streamed = _stream_two_batches(
+        spark, base, b0, b1, jobs.stream_documents, jobs.auc_stream
+    )
+    assert state_map(spark.read.parquet(streamed)) == state_map(
+        spark.read.parquet(path)
+    )
 
 
 def test_dead_letter_stream_matches_batch(spark, sf_dir, tmp_path_factory):
