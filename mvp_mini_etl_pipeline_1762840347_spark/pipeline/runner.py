@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.js import js_str_or
+from ..io import local_frame
 from .sinks import users_export_projection, write_csv
 from .sources import ExtractResult, load_users
 
@@ -60,13 +61,7 @@ class PipelineRun:
 
     def log_df(self, spark: SparkSession) -> DataFrame:
         """ST2 log as a DataFrame (ts, stage, message)."""
-        return spark.createDataFrame(
-            [
-                {"ts": ts, "stage": stage, "message": msg}
-                for ts, stage, msg in self.log
-            ],
-            schema="ts string, stage string, message string",
-        )
+        return local_frame(spark, self.log, "ts string, stage string, message string")
 
 
 def build_metrics(users: DataFrame) -> dict:
@@ -106,7 +101,11 @@ def run_pipeline(
     # -- extract (S1/S7) ----------------------------------------------------
     run.stages["extract"] = "active"
     ext = (extract_fn or load_users)(spark)
-    users = ext.df.cache()  # consumed by metrics + filter + export (SURVEY §4)
+    # Metrics, filter and export each re-scan the extracted frame.  It
+    # is a driver-built local relation (io.local_frame), so a re-scan
+    # is a JVM-only LocalTableScan and no cache is kept: caching it
+    # would cost a materialising job and buy nothing.
+    users = ext.df
     rows_in = users.count()
     run.fallback_used = ext.fallback_used
     run.source_url = ext.source_url
@@ -136,5 +135,4 @@ def run_pipeline(
     run.stages["load"] = "done"
 
     run.metrics["duration_sec"] = round(time.time() - t0, 3)
-    users.unpersist()
     return run

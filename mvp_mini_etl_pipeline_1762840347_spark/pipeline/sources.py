@@ -16,6 +16,19 @@ payload, land it, then everything downstream is DataFrames.  At scale
 the landing step is replaced by `spark.read.json` over already-landed
 payload files (same schema, same normalizer); the enrichment /
 normalization layer is shared and is where the engine semantics live.
+
+Landing goes through `io.local_frame`: the payload becomes a JVM
+`LocalRelation` (Arrow-encoded, as Spark Connect clients send rows),
+not a pickled Python RDD.  The payload is already in driver memory, so
+nothing is lost, and every job over the extracted frame -- the row
+count, the metrics aggregate, the CSV/JSON export -- is a JVM-only
+`LocalTableScan` instead of a Python-worker task.  The rows still pass
+Spark's own verifier first, so what lands (and what falls back) is
+exactly what Spark's `createDataFrame` with the same schema would
+accept: an int postcode lands as its string, a float age is rejected.
+Users carry their payload index as `ingest_idx`, as launches do, so
+order and the `user-<idx>` id never depend on how the relation is
+partitioned.
 """
 
 from __future__ import annotations
@@ -31,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.js import full_name, js_str_or
+from ..io import local_frame
 
 USERS_API_ENV = "RANDOM_USER_API_URL"
 USERS_API_DEFAULT = "https://randomuser.me/api/?results=500"
@@ -79,6 +93,17 @@ RAW_USER_SCHEMA = T.StructType(
         T.StructField(
             "picture", T.StructType([T.StructField("large", T.StringType())])
         ),
+    ]
+)
+
+# A users payload lands as (user, payload index) pairs.  Each user is
+# verified as a nested RAW_USER_SCHEMA struct, so it is accepted exactly
+# when it would be as a top-level RAW_USER_SCHEMA row, whatever its
+# shape (dict, list, or something else the API sends).
+LANDED_USER_SCHEMA = T.StructType(
+    [
+        T.StructField("user", RAW_USER_SCHEMA),
+        T.StructField("ingest_idx", T.LongType()),
     ]
 )
 
@@ -155,15 +180,17 @@ def fallback_users_df(spark: SparkSession) -> DataFrame:
         }
         for i, (uid, name, email, phone, nat, city, valid) in enumerate(FALLBACK_USERS)
     ]
-    return spark.createDataFrame(rows, schema=ENRICHED_USER_SCHEMA)
+    return local_frame(spark, rows, ENRICHED_USER_SCHEMA)
 
 
 def enrich_users(raw: DataFrame) -> DataFrame:
     """P1 enrichment projection (reference src/lib/users.js:16-35):
-    flatten/rename with JS-falsy defaults, synthesized id, trimmed
-    full name, rebuilt location struct, literal valid=true, and the
-    explicit ingest-order column the order-dependent operators need."""
-    idx = F.monotonically_increasing_id()
+    flatten/rename with JS-falsy defaults, synthesized `user-<idx>` id,
+    trimmed full name, rebuilt location struct, literal valid=true.
+    `raw` carries the payload index as `ingest_idx` (see
+    `LANDED_USER_SCHEMA`), the explicit ingest order the
+    order-dependent operators need."""
+    idx = F.col("ingest_idx")
     return raw.select(
         js_str_or(F.col("login.uuid"), F.concat(F.lit("user-"), idx.cast("string"))).alias("id"),
         full_name(F.col("name.first"), F.col("name.last")).alias("name"),
@@ -185,7 +212,7 @@ def enrich_users(raw: DataFrame) -> DataFrame:
         js_str_or(F.col("nat"), F.lit("")).alias("nat"),
         F.col("picture.large").alias("picture"),
         F.lit(True).alias("valid"),
-        idx.alias("ingest_idx"),
+        idx,
     )
 
 
@@ -210,8 +237,11 @@ def load_users(
         results = payload.get("results") or []
         if not results:
             raise ValueError("users API returned no results")
-        raw = spark.createDataFrame(results, schema=RAW_USER_SCHEMA)
-        return ExtractResult(enrich_users(raw), False, src, _now_iso())
+        landed = local_frame(
+            spark, [(u, i) for i, u in enumerate(results)], LANDED_USER_SCHEMA
+        )
+        users = enrich_users(landed.select("user.*", "ingest_idx"))
+        return ExtractResult(users, False, src, _now_iso())
     except Exception:
         return ExtractResult(fallback_users_df(spark), True, src, _now_iso())
 
@@ -269,7 +299,7 @@ def fallback_launches_df(spark: SparkSession) -> DataFrame:
         for i, (lid, name, date_utc, success, upcoming, rocket, launchpad)
         in enumerate(FALLBACK_LAUNCHES)
     ]
-    return spark.createDataFrame(rows, schema=RAW_LAUNCH_SCHEMA)
+    return local_frame(spark, rows, RAW_LAUNCH_SCHEMA)
 
 
 def build_launch_metrics(launches: DataFrame) -> dict:
@@ -312,7 +342,8 @@ def load_launches(
         except Exception:
             pass  # S2: per-endpoint fail-soft
     if rows:
-        launches = spark.createDataFrame(
+        launches = local_frame(
+            spark,
             [
                 {
                     "id": r.get("id"),
@@ -327,7 +358,7 @@ def load_launches(
                 }
                 for i, r in enumerate(rows)
             ],
-            schema=RAW_LAUNCH_SCHEMA,
+            RAW_LAUNCH_SCHEMA,
         )
         return ExtractResult(launches, False, base, _now_iso())
     return ExtractResult(fallback_launches_df(spark), True, base, _now_iso())
@@ -347,7 +378,7 @@ def load_json_sources_failsoft(
             rows = payload if isinstance(payload, list) else [payload]
             if not rows:
                 raise ValueError("empty")
-            out[name] = spark.createDataFrame(rows)
+            out[name] = local_frame(spark, rows)
         except Exception:
-            out[name] = spark.createDataFrame([], schema=T.StructType([]))
+            out[name] = local_frame(spark, [], T.StructType([]))
     return out

@@ -19,7 +19,7 @@ from functools import partial
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import read_events, read_table
+from ..io import local_frame, read_events, read_table
 from .registry import query
 
 _HEX = "0123456789abcdef"
@@ -3512,7 +3512,8 @@ def fd_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Re-attach the 6 candidate names driver-side: a 6-row broadcast
     # lookup, never a per-row literal through the shuffle.
-    names = spark.createDataFrame(
+    names = local_frame(
+        spark,
         [
             (idx, table, det, dep)
             for idx, (table, det, dep) in enumerate(_FD_CANDIDATES)

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..io import read_table
+from ..io import local_frame, read_table
 from .registry import query
 
 
@@ -372,7 +372,7 @@ def range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .events import _events
 
     e = _events(spark, sf_dir)
-    bands = spark.createDataFrame(_BANDS, "lo double, hi double, band string")
+    bands = local_frame(spark, _BANDS, "lo double, hi double, band string")
     return (
         e.join(
             F.broadcast(bands),

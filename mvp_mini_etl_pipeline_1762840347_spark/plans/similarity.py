@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..io import read_table
+from ..io import local_frame, read_table
 from .registry import query
 
 N_QUERIES = 5
@@ -1957,8 +1957,8 @@ def coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .localCheckpoint()
             )
-    return spark.createDataFrame(
-        trace, "step bigint, vec_id bigint, d2_at_selection bigint"
+    return local_frame(
+        spark, trace, "step bigint, vec_id bigint, d2_at_selection bigint"
     )
 
 

@@ -48,7 +48,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..io import read_events, read_table
+from ..io import local_frame, read_events, read_table
 from .registry import query
 
 # 60-bit hash space: 15 hex chars of md5.  Fits BIGINT with headroom.
@@ -590,9 +590,7 @@ def _qh_estimator(o: DataFrame, cum: DataFrame) -> DataFrame:
         F.element_at("exq", 2).alias("ex95"),
         F.element_at("exq", 3).alias("ex99"),
     )
-    qdf = cum.sparkSession.createDataFrame(
-        [(0.50,), (0.95,), (0.99,)], "q double"
-    )
+    qdf = local_frame(cum.sparkSession, [(0.50,), (0.95,), (0.99,)], "q double")
     hit = (
         qdf.crossJoin(F.broadcast(n))
         .join(cum, F.col("cum_before") + F.col("c") >= F.col("q") * F.col("n"))

@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from ..io import local_frame
+
 # Fallback stream schema for TIMESTAMP(NANOS) landing files, which
 # Spark's vectorized reader only surfaces as raw longs (see
 # plans/events.py / io.read_events for the batch-side twin).
@@ -1036,7 +1038,7 @@ def scd2_merge_step(
             )
         )
         if target is None:
-            target = spark.createDataFrame([], schema=SCD2_DIM_SCHEMA)
+            target = local_frame(spark, [], SCD2_DIM_SCHEMA)
         return scd2_merge(
             target, last, key="user_id", effective="eff_ts",
             attrs=["event_type"],
