@@ -2,9 +2,17 @@
 
 Scale notes
 -----------
-* ``spark.read.parquet`` gives predicate pushdown + column pruning for
-  free; every query should therefore select only what it needs and put
-  filters as early as possible (Catalyst pushes them into the scan).
+* ``read_parquet`` is the package's only parquet reader.  A parquet
+  scan gives predicate pushdown + column pruning for free; every query
+  should therefore select only what it needs and put filters as early
+  as possible (Catalyst pushes them into the scan).
+* ``spark.read.parquet`` without a schema runs one job to read footers
+  and infer one (80-135 ms on a 4-core local session, against 10-27 ms
+  for a schema-given read; 421 of the 2,467 jobs of one pass over all
+  306 queries at sf0.1, ``tools/job_census.py``).  ``read_parquet``
+  infers once per path and then hands Spark the schema it inferred, as
+  long as the path's files and the inference confs are unchanged -- a
+  schema-given read plans exactly like the inferred one.
 * ``ingest_order(df, order_col)`` reproduces the reference's implicit
   "source order" semantics (reference keeps JS arrays in fetch order;
   its lastRecord / tail-150 operators depend on it -- see SURVEY §2.5
@@ -15,6 +23,8 @@ Scale notes
 
 from __future__ import annotations
 
+import contextlib
+import os
 from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,11 +58,72 @@ INGEST_KEY = {
 }
 
 
+# Session confs that change what schema parquet inference returns for
+# the same files.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive",
+)
+
+# path -> ((stamp, confs), inferred schema); one entry per path,
+# replaced whole, so concurrent readers (fan_out members) need no lock:
+# the worst race re-infers once more.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _stamp(path: str) -> tuple:
+    """(name, inode, size, mtime_ns) of the file at ``path``, or of the
+    directory and every entry below it; empty when nothing is there.
+    Spark names each written part file uniquely, so a rewrite through
+    Spark always changes the stamp."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return ()
+    out = [(path, st.st_ino, st.st_size, st.st_mtime_ns)]
+    for root, dirs, files in os.walk(path):
+        for name in dirs + files:
+            full = os.path.join(root, name)
+            with contextlib.suppress(OSError):  # removed while listed
+                st = os.stat(full)
+                out.append((full, st.st_ino, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job
+    after the first read of ``path``.
+
+    The first read infers as Spark always does and memoizes the schema
+    under the path's stamp (``_stamp``) and the parquet inference
+    confs (``_INFERENCE_CONFS``).  While both read the same, later
+    reads pass that schema to ``spark.read.schema(...)``, which lists
+    the files but launches no job.  A changed file, an added or
+    removed one, or a flipped conf re-infers and replaces the entry.
+    A missing path is read as given, so it fails as Spark's reader
+    does."""
+    stamp = _stamp(path)
+    key = (stamp, tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+    hit = _SCHEMAS.get(path)
+    if stamp and hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if stamp:
+        _SCHEMAS[path] = (key, df.schema)
+    return df
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver table. Plain parquet scan -- pushdown-friendly."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -34,6 +34,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io import read_parquet
 from ..plans.warehouse import fingerprint_frame
 from .table_format import _staged_swap
 
@@ -78,4 +79,4 @@ class ResultCache:
             return None if self.last_hit else (compute(), json.dumps(key))
 
         _staged_swap(data_path, _build, _FINGERPRINTS)
-        return self.spark.read.parquet(data_path)
+        return read_parquet(self.spark, data_path)

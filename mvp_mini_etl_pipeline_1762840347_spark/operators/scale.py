@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import read_parquet
+
 
 # ---------------------------------------------------------------------------
 # Salted skew join
@@ -118,7 +120,7 @@ def read_pruned(
     non-matching directories are never listed into the plan, which is
     what makes a 100 TB hypertable queryable -- I/O proportional to
     the slice, not the table."""
-    return spark.read.parquet(path).filter(predicate)
+    return read_parquet(spark, path).filter(predicate)
 
 
 # ---------------------------------------------------------------------------
@@ -270,7 +272,7 @@ def compact_small_files(
         total = sum(os.path.getsize(f) for f in before)
         stats.update(files_before=len(before), bytes=total)
         n = max(1, math.ceil(total / target_bytes))
-        return spark.read.parquet(path).repartition(n), None
+        return read_parquet(spark, path).repartition(n), None
 
     _staged_swap(path, _build)
     return {

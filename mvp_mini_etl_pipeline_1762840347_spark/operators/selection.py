@@ -8,64 +8,96 @@ sorts the full table; an unpartitioned ``row_number()`` window moves
 it through ONE reducer.
 
 This operator runs the classic iterative histogram-narrowing
-selection instead (the median-of-histograms algorithm): each round
-bins the surviving value range into ``bins`` equi-width buckets with
-ONE map-side-combinable aggregation, locates the bucket containing
-the target rank from the <= ``bins``-row histogram, and recurses into
-it.  After ``rounds`` rounds the candidate range holds ~n/bins^rounds
-rows, where an ordinary partitioned window finishes the job.  All
-bucket bounds and residual ranks live in tiny broadcast frames -- the
-narrowing is data-flow, with NO driver round-trip between passes, so
-the whole selection is one lazily-composed DataFrame plan.
+selection instead (the median-of-histograms algorithm), steered from
+the driver: each round bins every query's candidate range into
+``bins`` equi-width buckets with ONE map-side-combinable aggregation,
+collects the <= ``bins`` x queries histogram rows, and picks each
+query's bucket and residual rank in exact Python-int arithmetic.  The
+next round's plan carries those bounds as literals.  Rounds stop when
+every chosen bucket is one value wide: that value IS the order
+statistic, so no final window pass sorts a sliver.
+
+Why the driver steers: the earlier form kept bucket bounds and
+residual ranks in broadcast frames so the whole selection was one
+lazily composed plan, but every round's bounds then ran as its own
+broadcast/subquery job -- 12 of the 15 jobs one
+``token_weighted_median_len`` call ran (sf0.1, 4 cores), each on
+nested-loop joins and DECIMAL bound arithmetic.  A driver round-trip
+of a few hundred rows costs less than one such job.
 
 Multiple ranks (e.g. the two trim points of a trimmed mean, or a
-whole percentile grid) resolve in the SAME passes: the bounds frame
-carries one row per query id and every histogram/window partitions by
-``qid``, so selecting 99 percentiles costs the same number of scans
-as selecting one.  When ``v`` itself carries a ``qid`` column, each
-query selects over ONLY its own group's rows -- exact per-group
-percentiles (p95 per tenant/event type) in the same passes.
+whole percentile grid) resolve in the SAME passes: queries that share
+a candidate range share its histogram, and every round is one scan
+however many ranks ride along.  When ``v`` itself carries a ``qid``
+column, each query selects over ONLY its own group's rows -- exact
+per-group percentiles (p95 per tenant/event type) in the same passes.
 
-At 100 TB: each round scans the (shrinking) candidate set once with
-constant-size partial state; ``rounds=2`` with 256 bins narrows 10^12
-rows to ~10^7 -- add a third round for another /256 if the final
-window's partitions would not fit an executor.
+At 100 TB: ⌈log_bins(hi − lo + 1)⌉ scans of ``v``, each with
+constant-size partial state, and at most ``bins`` x queries rows sent
+to the driver per round (256 bins resolve any 32-bit range in 4
+rounds, any 64-bit one in 8).  The per-row cost is one CASE branch
+per active candidate range.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Mapping
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+_LONG_MAX = (1 << 63) - 1
+
+
+def _bin(lo: int, hi: int, bw: int) -> Column:
+    """Bucket of ``c`` in ``[lo, hi]`` at width ``bw`` (``c - lo``
+    integer-divided).  ``c - lo`` fits a BIGINT whenever the range
+    does; a range wider than the BIGINT domain (only when ``lo < 0``)
+    takes the DECIMAL form for the rows where the subtraction would
+    overflow, so every realistic dataset stays on the all-long path
+    and nothing ever rounds through a double (past 2^53 a double
+    cannot tell neighbouring values apart)."""
+    c = F.col("c")
+    fast = F.call_function("div", c - F.lit(lo), F.lit(bw))
+    if hi - lo <= _LONG_MAX:
+        return fast
+    wide = F.call_function(
+        "div", c.cast("decimal(38,0)") - F.lit(lo), F.lit(bw)
+    ).cast("bigint")
+    return F.when(c <= F.lit(_LONG_MAX + lo), fast).otherwise(wide)
 
 
 def rank_select(
     v: DataFrame,
-    ranks: DataFrame,
-    rounds: int = 2,
+    ranks: Mapping[str, int | None],
+    bounds: tuple[int | None, int | None] | Mapping[str, tuple[int, int]],
     bins: int = 256,
     weight: str | None = None,
-    bounds: DataFrame | None = None,
-) -> DataFrame:
-    """Return one row per rank query: ``(qid, value)`` where
-    ``value`` is the rank-th smallest ``c`` among the rows the query
-    selects over.
+) -> dict[str, int]:
+    """Return ``{qid: value}``: for each rank query, the rank-th
+    smallest ``c`` among the rows the query selects over.
 
     ``v``: a DataFrame with a BIGINT column ``c`` (integer domain --
     use cents / scaled integers for money), optionally a BIGINT
     ``weight`` column, and optionally a ``qid`` column.  WITHOUT a
     ``qid`` column every rank query runs over all of ``v``; WITH one,
     query ``qid`` selects over only the rows whose ``v.qid`` matches
-    (grouped selection -- per-group exact percentiles).  The caller
-    should ``localCheckpoint`` a scan-derived ``v`` so the per-round
-    re-reads hit materialized blocks instead of re-deriving the
-    projection per branch.
+    (grouped selection -- per-group exact percentiles).  Every round
+    scans ``v``, so the caller should ``localCheckpoint`` a
+    scan-derived ``v``.
 
-    ``ranks``: a tiny DataFrame ``(qid: string, rank: bigint)`` with
-    1-based ranks in ``[1, count of the query's rows]``.  It is
-    broadcast; one row per independent selection.  In the ungrouped
-    case ``qid`` is just a label; in the grouped case it must match
-    ``v.qid`` values.
+    ``ranks``: ``{qid: rank}`` with 1-based ranks in ``[1, total]``
+    (row count, or total weight when weighted) of the query's rows.
+    In the ungrouped case ``qid`` is just a label; in the grouped case
+    it must match ``v.qid`` values.  A rank that is None or below 1,
+    or one past the query's total, selects nothing: its qid is absent
+    from the result (the empty-input case).
+
+    ``bounds``: the value range as Python ints, read from the
+    aggregate the caller already runs for the ranks -- ``(lo, hi)``
+    shared by every query (ungrouped), or ``{qid: (lo, hi)}``
+    (grouped).  Any superset of the true range selects identical
+    values; a None bound (no rows) selects nothing.
 
     ``weight``: optional positive-BIGINT weight column in ``v``.
     Ranks are then in WEIGHT units: the result is the smallest value
@@ -75,134 +107,53 @@ def rank_select(
     weighting doc lengths by token count).  Unweighted selection is
     the weight-1 special case; histogram state stays constant-size
     either way.
-
-    ``bounds``: optional pre-computed value range, either a 1-row
-    ``(lo, hi)`` frame applied to every rank query or a per-query
-    ``(qid, lo, hi)`` frame.  Without it the selector derives the
-    range itself with one extra min/max aggregation pass over ``v``
-    -- callers that already pay an aggregation for the rank frame
-    (grouped p95: the per-group count) or that eagerly checkpoint
-    ``v`` (where an Observation on the checkpoint job delivers
-    min/max/count for free) should hand the range in and skip that
-    pass; any superset of the true range selects identical values.
     """
-    w = F.col(weight) if weight else F.lit(1).cast("bigint")
-    # Range arithmetic must stay exact for ANY bigint input: a
-    # candidate range spanning most of the BIGINT domain makes
-    # (hi - lo) itself overflow int64, and float division loses ULPs
-    # past 2^53.  DECIMAL(38,0) handles both -- but decimal ops cost
-    # ~5-10x a long op, so decimal is confined to the places that are
-    # per-QID (the bucket width, the bound updates: a handful of rows)
-    # or provably rare (the per-row offset only when the range really
-    # does straddle more than half the domain -- the CASE guard below
-    # keeps every realistic dataset on the all-long fast path).
-    width_sql = (
-        f"CAST(greatest((CAST(hi AS DECIMAL(38,0)) - lo + {bins})"
-        f" div {bins}, 1) AS BIGINT)"
-    )
-    # Sequential CASE branches (not OR) so the `max + lo` probe is only
-    # evaluated when lo < 0 -- under ANSI mode the addition itself
-    # would overflow for nonnegative lo.
-    bin_sql = (
-        "CASE WHEN lo >= 0 THEN (c - lo) div bw"
-        " WHEN c <= 9223372036854775807 + lo THEN (c - lo) div bw"
-        " ELSE CAST((CAST(c AS DECIMAL(38,0)) - lo) div bw AS BIGINT) END"
-    )
     grouped = "qid" in v.columns
-    if grouped:
-        v = v.withColumnRenamed("qid", "vqid")
-    if bounds is not None:
-        if "qid" in bounds.columns:
-            bounds = bounds.join(F.broadcast(ranks), "qid").select(
-                "qid", "lo", "hi", "rank"
-            )
-        else:
-            bounds = bounds.crossJoin(F.broadcast(ranks)).select(
-                "qid", "lo", "hi", "rank"
-            )
-    elif grouped:
-        bounds = (
-            v.groupBy(F.col("vqid").alias("qid"))
-            .agg(F.min("c").alias("lo"), F.max("c").alias("hi"))
-            .join(F.broadcast(ranks), "qid")
-            .select("qid", "lo", "hi", "rank")
-        )
-    else:
-        # (qid, lo, hi, rank) -- the full value range per query.
-        bounds = (
-            v.agg(F.min("c").alias("lo"), F.max("c").alias("hi"))
-            .crossJoin(F.broadcast(ranks))
-            .select("qid", "lo", "hi", "rank")
-        )
+    # qid -> [lo, hi, residual rank] while the query is unresolved
+    live: dict[str, list[int]] = {}
+    for q, rank in ranks.items():
+        lo, hi = bounds.get(q, (None, None)) if grouped else bounds
+        if rank is not None and rank >= 1 and lo is not None and hi is not None:
+            live[q] = [lo, hi, rank]
+    done = {q: st[0] for q, st in live.items() if st[0] == st[1]}
+    live = {q: st for q, st in live.items() if st[0] != st[1]}
+    w = F.col(weight) if weight else F.lit(1).cast("bigint")
 
-    def _join_bounds(b: DataFrame) -> DataFrame:
-        cond = (F.col("c") >= F.col("lo")) & (F.col("c") <= F.col("hi"))
-        if grouped:
-            cond = (F.col("vqid") == F.col("qid")) & cond
-        return v.join(F.broadcast(b), cond)
+    def _range(q: str, st: list[int]) -> tuple:
+        return (q if grouped else None, st[0], st[1])
 
-    for _ in range(rounds):
-        # width computed ONCE per qid row (decimal, trivially few rows),
-        # then joined in as a plain long for the per-row binning
-        b = bounds.select("*", F.expr(width_sql).alias("bw"))
-        binned = (
-            _join_bounds(b)
-            .select(
-                "qid",
-                "lo",
-                "hi",
-                "rank",
-                "bw",
-                F.expr(bin_sql).alias("bin"),
-                w.alias("w"),
-            )
-            .groupBy("qid", "lo", "hi", "rank", "bw", "bin")
-            .agg(F.sum("w").alias("bn"))
-        )
-        wcum = Window.partitionBy("qid").orderBy("bin")  # <= bins rows/qid
-        cum = binned.select(
-            "*", (F.sum("bn").over(wcum) - F.col("bn")).alias("before")
-        )
-        chosen = cum.filter(
-            (F.col("before") < F.col("rank"))
-            & (F.col("before") + F.col("bn") >= F.col("rank"))
-        )
-        bounds = chosen.select(
-            "qid",
-            F.expr(
-                "CAST(CAST(lo AS DECIMAL(38,0))"
-                " + CAST(bin AS DECIMAL(38,0)) * bw"
-                " AS BIGINT)"
-            ).alias("new_lo"),
-            F.expr(
-                "CAST(least(CAST(hi AS DECIMAL(38,0)),"
-                " CAST(lo AS DECIMAL(38,0))"
-                " + (CAST(bin AS DECIMAL(38,0)) + 1) * bw - 1)"
-                " AS BIGINT)"
-            ).alias("new_hi"),
-            (F.col("rank") - F.col("before")).alias("rank"),
-        ).select(
-            "qid",
-            F.col("new_lo").alias("lo"),
-            F.col("new_hi").alias("hi"),
-            "rank",
-        )
-
-    # Final pass: order statistics inside the ~n/bins^rounds sliver.
-    # Running weight with a ROWS frame; the first value whose
-    # cumulative weight reaches the residual rank is min(c) over the
-    # qualifying rows (stable under tie order: rows sharing c give
-    # the same crossing value).  With weight=1 this is exactly
-    # row_number selection.
-    wsel = (
-        Window.partitionBy("qid")
-        .orderBy("c")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        _join_bounds(bounds)
-        .select("qid", "c", "rank", F.sum(w).over(wsel).alias("runw"))
-        .filter(F.col("runw") >= F.col("rank"))
-        .groupBy("qid")
-        .agg(F.min("c").alias("value"))
-    )
+    while live:
+        # one histogram per distinct candidate range (ungrouped
+        # queries descend one bucket tree, so their ranges at the
+        # same depth are equal or disjoint); key = range * bins + bin
+        ranges = list(dict.fromkeys(_range(q, st) for q, st in live.items()))
+        index = {r: i for i, r in enumerate(ranges)}
+        key = None
+        for i, (g, lo, hi) in enumerate(ranges):
+            bw = (hi - lo + bins) // bins
+            cond = F.col("c").between(F.lit(lo), F.lit(hi))
+            if grouped:
+                cond = (F.col("qid") == F.lit(g)) & cond
+            val = F.lit(i * bins) + _bin(lo, hi, bw)
+            key = F.when(cond, val) if key is None else key.when(cond, val)
+        hist: dict[int, list[tuple[int, int]]] = {}
+        for k, n in (
+            v.groupBy(key.alias("k")).agg(F.sum(w).alias("n")).collect()
+        ):
+            if k is not None:  # rows outside every candidate range
+                hist.setdefault(k // bins, []).append((k % bins, n))
+        for q, st in list(live.items()):
+            lo, hi, rank = st
+            bw = (hi - lo + bins) // bins
+            before = 0
+            del live[q]
+            for b, n in sorted(hist.get(index[_range(q, st)], [])):
+                if before + n >= rank:
+                    new_lo, new_hi = lo + b * bw, min(hi, lo + (b + 1) * bw - 1)
+                    if new_lo == new_hi:
+                        done[q] = new_lo
+                    else:
+                        live[q] = [new_lo, new_hi, rank - before]
+                    break
+                before += n
+    return done

@@ -49,6 +49,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io import read_parquet
 from .scale import merge_upsert
 
 _STAGING = "_staging"
@@ -169,11 +170,11 @@ class SnapshotTable:
         cur = self.current_snapshot()
         if cur is None:
             raise FileNotFoundError(f"snapshot table {self.root} has no commits")
-        return self.spark.read.parquet(os.path.join(self.root, cur))
+        return read_parquet(self.spark, os.path.join(self.root, cur))
 
     def read_version(self, n: int) -> DataFrame:
         """Time travel: read snapshot n regardless of the pointer."""
-        return self.spark.read.parquet(os.path.join(self.root, f"snapshot-{n}"))
+        return read_parquet(self.spark, os.path.join(self.root, f"snapshot-{n}"))
 
     def commit(self, df: DataFrame, marker: int | None = None) -> str:
         """Land `df` as the next snapshot and swap the pointer.
@@ -363,7 +364,7 @@ class SnapshotSet:
         snap = f"snapshot-{max(taken) + 1 if taken else 0}"
         df.write.mode("overwrite").parquet(os.path.join(tdir, snap))
         self._staged[name] = snap
-        return self.spark.read.parquet(os.path.join(tdir, snap))
+        return read_parquet(self.spark, os.path.join(tdir, snap))
 
     def commit_staged(self, marker: int | None = None) -> str:
         """Publish every staged member (plus carried-forward live
@@ -415,15 +416,16 @@ class SnapshotSet:
         m = self.manifest()
         if m is None:
             raise FileNotFoundError(f"snapshot set {self.root} has no commits")
-        return self.spark.read.parquet(self._resolve(name, m))
+        return read_parquet(self.spark, self._resolve(name, m))
 
     def read_version(self, version: int, name: str) -> DataFrame:
         """Set-level time travel: member ``name`` as of manifest
         ``version`` -- every member read at the same version is the
         CONSISTENT historical set, regardless of per-table snapshot
         numbering."""
-        return self.spark.read.parquet(
-            self._resolve(name, self._load_manifest(f"manifest-{version}"))
+        return read_parquet(
+            self.spark,
+            self._resolve(name, self._load_manifest(f"manifest-{version}")),
         )
 
     def restore(self, version: int) -> None:
@@ -553,15 +555,15 @@ class DeltaLogTable:
         for i, (kind, _) in enumerate(entries):
             if kind == "checkpoint":
                 start = i
-        df = self.spark.read.parquet(
-            os.path.join(self.root, entries[start][1])
+        df = read_parquet(
+            self.spark, os.path.join(self.root, entries[start][1])
         )
         # Whether entries[start] is the newest checkpoint or (when the
         # log has no checkpoint yet) the first delta, the remaining
         # entries fold on top of it the same way.
         tail = entries[start + 1:]
         for kind, d in tail:
-            delta = self.spark.read.parquet(os.path.join(self.root, d))
+            delta = read_parquet(self.spark, os.path.join(self.root, d))
             df = merge_upsert(df, delta, self.key)
         return df
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import read_events, read_table
+from ..io import local_frame, read_events, read_table
 from .registry import query
 
 _CUT = "1999-01-01"
@@ -2667,23 +2667,24 @@ _SEL_BINS = 256
 )
 def exact_median_2pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT median of line revenue without a global sort: the
-    classic distributed selection algorithm -- two histogram-
-    narrowing rounds, then order statistics inside a sliver.  Round 1
-    bins all values into {b} equi-width buckets over [min, max] and
-    finds the bucket containing the target rank; round 2 re-bins ONLY
-    that bucket's 1/{b} of the data; the final bucket holds ~n/{b}^2
-    rows, where rank selection is trivial.  The DuckDB oracle states
-    the ground truth directly (the rank-th smallest value), so the
-    hash match proves the narrowing algorithm selects the exact
-    element -- not an approximation like the quantile sketch family.
+    classic distributed selection algorithm -- histogram-narrowing
+    rounds until the bucket holding the target rank is one value wide.
+    Round 1 bins all values into {b} equi-width buckets over
+    [min, max] and finds the bucket containing the target rank; round
+    2 re-bins ONLY that bucket's 1/{b} of the range, and so on.  The
+    DuckDB oracle states the ground truth directly (the rank-th
+    smallest value), so the hash match proves the narrowing algorithm
+    selects the exact element -- not an approximation like the
+    quantile sketch family.
 
     Scale shape: each round is ONE map-side-combinable histogram
-    aggregation (a {b}-row result) -- the bucket choice, bounds, and
-    residual rank all stay in 1-row broadcast frames, so NO driver
-    round-trip parametrizes the next pass and no stage sorts more
-    than the twice-narrowed sliver (window over ~n/{b}^2 rows).  At
-    100 TB add a third round for another /{b}; the loop shape is
-    unchanged.  All arithmetic BIGINT.  Core:
+    aggregation (a <= {b}-row result) whose rows the driver reads to
+    pick the bucket, bounds and residual rank for the next round's
+    literals, so nothing sorts and no stage shuffles more than the
+    histogram: ceil(log_{b}(max - min + 1)) rounds at any scale.  The
+    count, the target rank and the bounds come from one aggregation;
+    the one-row answer lands as a local relation.  All arithmetic
+    BIGINT.  Core:
     operators/selection.py::rank_select (shared with
     trimmed_mean_exact, which resolves TWO ranks in the same
     passes)."""
@@ -2697,13 +2698,14 @@ def exact_median_2pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = v.agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.expr("(count(*) + 1) div 2").cast("bigint").alias("target_rank"),
-    )
-    ranks = n.select(
-        F.lit("median").alias("qid"), F.col("target_rank").alias("rank")
-    )
-    sel = rank_select(v, ranks, rounds=2, bins=_SEL_BINS)
-    return n.crossJoin(
-        F.broadcast(sel.select(F.col("value").alias("median_cents")))
+        F.min("c").alias("lo"),
+        F.max("c").alias("hi"),
+    ).first()
+    sel = rank_select(v, {"median": n.target_rank}, (n.lo, n.hi), bins=_SEL_BINS)
+    return local_frame(
+        spark,
+        [(n.n_rows, n.target_rank, sel["median"])] if sel else [],
+        "n_rows bigint, target_rank bigint, median_cents bigint",
     )
 
 
@@ -2746,12 +2748,12 @@ def trimmed_mean_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the distributed form reproduces row-exact trimming,
     including tie handling at both cut points.
 
-    Both trim ranks resolve in the SAME two histogram-narrowing
-    passes (operators/selection.py::rank_select with a 2-row rank
-    frame partitioned by qid) -- selecting the second order statistic
+    Both trim ranks resolve in the SAME histogram-narrowing passes
+    (operators/selection.py::rank_select with two rank queries sharing
+    each round's histogram) -- selecting the second order statistic
     is free.  The final pass is one conditional aggregation against
-    the broadcast cut values; ties AT the cut values are kept by rank
-    arithmetic (count(c <= lo_val) - k copies of lo_val, and
+    the cut values as literals; ties AT the cut values are kept by
+    rank arithmetic (count(c <= lo_val) - k copies of lo_val, and
     symmetrically at the top), not by a lossy value filter.  Every
     quantity up to the final division is BIGINT-exact, so the one
     emitted float divides identical integers in both engines.
@@ -2768,61 +2770,41 @@ def trimmed_mean_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = v.agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.expr(f"count(*) * {_TRIM_PCT} div 100").cast("bigint").alias("k_trim"),
+        F.min("c").alias("lo"),
+        F.max("c").alias("hi"),
+    ).first()
+    n_rows, k_trim = st.n_rows, st.k_trim
+    cuts = rank_select(
+        v, {"lo": k_trim + 1, "hi": n_rows - k_trim}, (st.lo, st.hi), bins=_SEL_BINS
     )
-    ranks = st.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("lo").alias("qid"),
-                    (F.col("k_trim") + 1).alias("rank"),
-                ),
-                F.struct(
-                    F.lit("hi").alias("qid"),
-                    (F.col("n_rows") - F.col("k_trim")).alias("rank"),
-                ),
-            )
-        ).alias("r")
-    ).select("r.qid", "r.rank")
-
-    cuts = (
-        rank_select(v, ranks, rounds=2, bins=_SEL_BINS)
-        .agg(
-            F.max(F.when(F.col("qid") == "lo", F.col("value"))).alias("lo_val"),
-            F.max(F.when(F.col("qid") == "hi", F.col("value"))).alias("hi_val"),
+    if len(cuts) < 2:  # no rows
+        return local_frame(
+            spark,
+            [],
+            "n_rows bigint, k_trim bigint, kept_rows bigint,"
+            " kept_cents bigint, trimmed_mean_cents double",
         )
-        .crossJoin(F.broadcast(st))
-    )
-
-    agg = (
-        v.crossJoin(F.broadcast(cuts))
-        .groupBy("lo_val", "hi_val", "n_rows", "k_trim")
-        .agg(
-            F.sum(
-                F.when(
-                    (F.col("c") > F.col("lo_val"))
-                    & (F.col("c") < F.col("hi_val")),
-                    F.col("c"),
-                ).otherwise(F.lit(0))
-            ).cast("bigint").alias("strict_sum"),
-            F.sum(
-                F.when(F.col("c") <= F.col("lo_val"), 1).otherwise(0)
-            ).cast("bigint").alias("cnt_le_lo"),
-            F.sum(
-                F.when(F.col("c") < F.col("hi_val"), 1).otherwise(0)
-            ).cast("bigint").alias("cnt_lt_hi"),
-        )
+    lo_val, hi_val = F.lit(cuts["lo"]), F.lit(cuts["hi"])
+    agg = v.agg(
+        F.sum(
+            F.when((F.col("c") > lo_val) & (F.col("c") < hi_val), F.col("c"))
+            .otherwise(F.lit(0))
+        ).cast("bigint").alias("strict_sum"),
+        F.sum(F.when(F.col("c") <= lo_val, 1).otherwise(0))
+        .cast("bigint").alias("cnt_le_lo"),
+        F.sum(F.when(F.col("c") < hi_val, 1).otherwise(0))
+        .cast("bigint").alias("cnt_lt_hi"),
     )
     kept_cents = (
         F.col("strict_sum")
-        + F.col("lo_val") * (F.col("cnt_le_lo") - F.col("k_trim"))
-        + F.col("hi_val")
-        * (F.col("n_rows") - F.col("k_trim") - F.col("cnt_lt_hi"))
+        + lo_val * (F.col("cnt_le_lo") - k_trim)
+        + hi_val * (F.lit(n_rows - k_trim) - F.col("cnt_lt_hi"))
     )
-    kept_rows = F.col("n_rows") - 2 * F.col("k_trim")
+    kept_rows = F.lit(n_rows - 2 * k_trim).cast("bigint")
     return agg.select(
-        "n_rows",
-        "k_trim",
-        kept_rows.cast("bigint").alias("kept_rows"),
+        F.lit(n_rows).cast("bigint").alias("n_rows"),
+        F.lit(k_trim).cast("bigint").alias("k_trim"),
+        kept_rows.alias("kept_rows"),
         kept_cents.cast("bigint").alias("kept_cents"),
         F.round(
             kept_cents.cast("double") / kept_rows.cast("double"), 4
@@ -2995,13 +2977,13 @@ influence_diagnostics.__doc__ = influence_diagnostics.__doc__.format(
 def exact_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT decile grid of line revenue in the SAME number of passes
     as a single median: rank_select resolves all nine order
-    statistics at once because every histogram round partitions by
-    query id -- the per-round cost is one map-side-combinable
-    aggregation whose result is <= 9 x bins rows, regardless of how
-    many quantiles ride along.  This is the exact counterpart of the
-    sketch_quantile_hist family: where the sketch trades error bounds
-    for one pass, this pays ~3 scans (of a shrinking candidate set)
-    for exactness -- the periodic calibration job a 100-TB pipeline
+    statistics at once because every histogram round bins each
+    distinct candidate range once -- the per-round cost is one
+    map-side-combinable aggregation whose result is <= 9 x bins rows,
+    regardless of how many quantiles ride along.  This is the exact
+    counterpart of the sketch_quantile_hist family: where the sketch
+    trades error bounds for one pass, this pays ~3 scans for
+    exactness -- the periodic calibration job a 100-TB pipeline
     runs to validate its sketches.  The oracle brute-forces a global
     row_number sort, proving each returned value IS the ceil(k*n/10)
     order statistic."""
@@ -3012,23 +2994,17 @@ def exact_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("c")
     ).localCheckpoint(eager=True)
 
-    st = v.agg(F.count("*").cast("bigint").alias("n_rows"))
-    ranks = st.select(
-        F.explode(F.sequence(F.lit(1), F.lit(9))).alias("k"), "n_rows"
-    ).select(
-        F.col("k").cast("string").alias("qid"),
-        F.col("k").cast("bigint").alias("decile"),
-        F.expr("(n_rows * k + 9) div 10").cast("bigint").alias("rank"),
-    )
-    sel = rank_select(v, ranks.select("qid", "rank"), rounds=2, bins=_SEL_BINS)
-    return (
-        sel.join(F.broadcast(ranks), "qid")
-        .select(
-            "decile",
-            F.col("rank").alias("target_rank"),
-            F.col("value").alias("value_cents"),
-        )
-        .orderBy("decile")
+    st = v.agg(
+        F.count("*").cast("bigint").alias("n_rows"),
+        F.min("c").alias("lo"),
+        F.max("c").alias("hi"),
+    ).first()
+    ranks = {str(k): (st.n_rows * k + 9) // 10 for k in range(1, 10)}
+    sel = rank_select(v, ranks, (st.lo, st.hi), bins=_SEL_BINS)
+    return local_frame(
+        spark,
+        [(int(q), ranks[q], sel[q]) for q in ranks if q in sel],
+        "decile bigint, target_rank bigint, value_cents bigint",
     )
 
 
@@ -3070,7 +3046,7 @@ def weighted_median_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominated by cheap lines.  Exercises the grouped AND weighted
     modes of the shared selector together: one rank query per
     priority, ranks in revenue-cent units, all five groups resolved
-    in the same two histogram passes
+    in the same histogram passes
     (operators/selection.py::rank_select with qid + weight).  The
     oracle brute-forces the per-group cumulative-weight window."""
     from ..operators.selection import rank_select
@@ -3091,26 +3067,30 @@ def weighted_median_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    # min/max share the rank frame's per-group pass and feed
-    # rank_select as pre-computed bounds (one fewer full aggregation
-    # over v; identical selection).
+    # min/max share the rank aggregation's per-group pass and feed
+    # rank_select as its bounds
     t = v.groupBy("qid").agg(
         F.sum("w").cast("bigint").alias("total_weight_cents"),
         F.expr("(sum(w) + 1) div 2").cast("bigint").alias("rank"),
         F.min("c").alias("lo"),
         F.max("c").alias("hi"),
+    ).collect()
+    sel = rank_select(
+        v,
+        {r.qid: r.rank for r in t},
+        {r.qid: (r.lo, r.hi) for r in t},
+        bins=64,
+        weight="w",
     )
-    sel = rank_select(v, t.select("qid", "rank"), rounds=2, bins=64,
-                      weight="w", bounds=t.select("qid", "lo", "hi"))
-    return (
-        sel.join(F.broadcast(t), "qid")
-        .select(
-            F.col("qid").alias("priority"),
-            "total_weight_cents",
-            F.col("rank").alias("target_w"),
-            F.col("value").alias("median_delay_days"),
-        )
-        .orderBy("priority")
+    return local_frame(
+        spark,
+        sorted(
+            (r.qid, r.total_weight_cents, r.rank, sel[r.qid])
+            for r in t
+            if r.qid in sel
+        ),
+        "priority string, total_weight_cents bigint, target_w bigint,"
+        " median_delay_days bigint",
     )
 
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import read_table
+from ..io import local_frame, read_table
 from .registry import query
 
 _N_FOLDS = 5
@@ -445,8 +445,8 @@ def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles in both engines, then rounded to integer cents); the
     calibration quantile is the histogram-narrowing selector
     (operators/selection.py::rank_select -- the oracle brute-forces
-    ORDER BY/LIMIT), and coverage is one conditional count.  Nothing
-    sorts more than the twice-narrowed calibration sliver."""
+    ORDER BY/LIMIT), and coverage is one conditional count against
+    q_hat as a literal.  Nothing sorts."""
     from ..operators.selection import rank_select
 
     li = read_table(spark, sf_dir, "lineitem")
@@ -477,9 +477,7 @@ def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     # min/max ride the calibration-count aggregation the query already
-    # pays, handed to the selector as precomputed bounds so it skips
-    # its own range pass over cal (operators/selection.py `bounds=`,
-    # the round-11 grouped-caller pattern applied to this caller).
+    # pays and are handed to the selector as its bounds.
     caln = cal.agg(
         F.count("*").cast("bigint").alias("n_cal"),
         F.expr(
@@ -488,37 +486,34 @@ def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("bigint").alias("target_rank"),
         F.min("c").alias("lo"),
         F.max("c").alias("hi"),
-    ).localCheckpoint()
-    qhat = rank_select(
-        cal,
-        caln.select(F.lit("q").alias("qid"), F.col("target_rank").alias("rank")),
-        rounds=2,
-        bins=256,
-        bounds=caln.select("lo", "hi"),
-    ).select(F.col("value").alias("q_hat_cents"))
+    ).first()
+    sel = rank_select(cal, {"q": caln.target_rank}, (caln.lo, caln.hi), bins=256)
+    if not sel:  # empty calibration fold
+        return local_frame(
+            spark,
+            [],
+            "n_train bigint, n_cal bigint, target_rank bigint, q_hat_cents bigint,"
+            " n_test bigint, n_covered bigint, coverage_pct double",
+        )
+    q_hat = F.lit(sel["q"]).cast("bigint")
     test = (
         v.filter(F.col("fold") == 9)
         .crossJoin(ab2)
         .select(F.expr(_CFP_SCORE).alias("s"))
     )
-    cov = (
-        test.crossJoin(F.broadcast(qhat))
-        .groupBy("q_hat_cents")
-        .agg(
-            F.count("*").cast("bigint").alias("n_test"),
-            F.sum(
-                F.when(F.col("s") <= F.col("q_hat_cents"), 1).otherwise(0)
-            ).cast("bigint").alias("n_covered"),
-        )
+    # grouped on the literal so an empty test fold still yields no row
+    cov = test.groupBy(q_hat.alias("q_hat_cents")).agg(
+        F.count("*").cast("bigint").alias("n_test"),
+        F.sum(F.when(F.col("s") <= q_hat, 1).otherwise(0))
+        .cast("bigint").alias("n_covered"),
     )
     return (
         fit_row.select(F.col("n").alias("n_train"))
-        .crossJoin(F.broadcast(caln))
         .crossJoin(F.broadcast(cov))
         .select(
             "n_train",
-            "n_cal",
-            "target_rank",
+            F.lit(caln.n_cal).cast("bigint").alias("n_cal"),
+            F.lit(caln.target_rank).cast("bigint").alias("target_rank"),
             "q_hat_cents",
             "n_test",
             "n_covered",

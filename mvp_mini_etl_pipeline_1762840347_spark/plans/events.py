@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..io import read_events
+from ..io import local_frame, read_events
 from .registry import query
 
 
@@ -1827,10 +1827,10 @@ def events_exact_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
     readout where percentile_approx's error bound is exactly what an
     SLO audit cannot accept.  One rank query per group rides the
     shared histogram-narrowing selector (qid = event_type), so ALL
-    groups resolve in the same two aggregation passes: per-round
-    state is (groups x bins) rows, and no stage ever sorts more than
-    a group's twice-narrowed sliver.  Contrast the textbook
-    row_number-per-group window (the oracle's plan): correct, but its
+    groups resolve in the same aggregation passes: per-round state is
+    (groups x bins) rows, and no stage sorts at all.  Contrast the
+    textbook row_number-per-group window (the oracle's plan): correct,
+    but its
     shuffle sorts every group's full history; the selector touches
     full data only with constant-size combinable state.  Rank
     ceil(0.95 n) on integer cents -- engine-exact."""
@@ -1843,27 +1843,19 @@ def events_exact_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
 
     # min/max ride the SAME per-group aggregation that computes the
-    # rank, then feed rank_select as pre-computed bounds -- the
-    # selector's own bounds derivation would re-aggregate v once more
-    # for numbers this pass already has (guide §2.4: two operations
-    # keyed the same way share one pass).
+    # rank and feed rank_select as its bounds (guide §2.4: two
+    # operations keyed the same way share one pass).
     n = v.groupBy("qid").agg(
         F.count("*").cast("bigint").alias("n_events"),
         F.expr("(count(*) * 95 + 99) div 100").cast("bigint").alias("rank"),
         F.min("c").alias("lo"),
         F.max("c").alias("hi"),
-    )
+    ).collect()
     sel = rank_select(
-        v, n.select("qid", "rank"), rounds=2, bins=64,
-        bounds=n.select("qid", "lo", "hi"),
+        v, {r.qid: r.rank for r in n}, {r.qid: (r.lo, r.hi) for r in n}, bins=64
     )
-    return (
-        sel.join(F.broadcast(n), "qid")
-        .select(
-            F.col("qid").alias("event_type"),
-            "n_events",
-            F.col("rank").alias("target_rank"),
-            F.col("value").alias("p95_cents"),
-        )
-        .orderBy("event_type")
+    return local_frame(
+        spark,
+        sorted((r.qid, r.n_events, r.rank, sel[r.qid]) for r in n if r.qid in sel),
+        "event_type string, n_events bigint, target_rank bigint, p95_cents bigint",
     )

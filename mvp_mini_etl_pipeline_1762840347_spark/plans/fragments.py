@@ -125,10 +125,20 @@ def fan_out(calls: dict[str, Callable[[], T]]) -> dict[str, T]:
     the cores while the driver starts the next; return results by name
     in ``calls`` order.  Every member finishes before this returns or
     raises; the first failure in ``calls`` order is re-raised with its
-    own type, noted with the member's name.  Members must use distinct
-    cache keys and directories: nothing here serializes them."""
+    own type, noted with the member's name.  Members inherit the
+    caller's local properties (job group, scheduler pool) and job
+    tags, so their jobs attribute to -- and cancel with -- the caller's
+    group.  Members must use distinct cache keys and directories:
+    nothing here serializes them."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.sql import SparkSession
+    from pyspark.util import inheritable_thread_target
+
+    session = SparkSession.getActiveSession()
+    if session is not None:
+        inherit = inheritable_thread_target(session)
+        calls = {name: inherit(call) for name, call in calls.items()}
     with ThreadPoolExecutor(max_workers=_FAN_OUT_WORKERS) as pool:
         futs = {name: pool.submit(call) for name, call in calls.items()}
     for name, fut in futs.items():

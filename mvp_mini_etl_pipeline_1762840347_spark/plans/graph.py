@@ -30,7 +30,10 @@ MAX_ITERS = 20
 def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Min-label propagation over an undirected edge list.
     Returns (node, cluster_id) where cluster_id = min node id in the
-    component.  Deterministic on any partitioning."""
+    component.  Deterministic on any partitioning.  A label moves one
+    hop per round, so a component whose diameter needs more than
+    ``MAX_ITERS`` rounds raises instead of returning unconverged
+    labels."""
     both = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     )
@@ -74,6 +77,11 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
         labels = new_labels.drop("old")
         if probe.get["changed"] == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components: labels still changing after {MAX_ITERS}"
+            " rounds (a component's diameter exceeds the round cap)"
+        )
     return labels.select("node", F.col("label").alias("cluster_id"))
 
 

@@ -15,7 +15,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..io import read_table
+from ..io import local_frame, read_table
 from .dedup import _SHINGLES_SQL
 from .registry import query
 
@@ -1708,27 +1708,31 @@ def token_weighted_median_len(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/selection.py::rank_select with weight=doc_len): each
     round's histogram sums token counts instead of row counts, so the
     constant-state/one-scan-per-round shape is unchanged, and the
-    final sliver picks the first value whose cumulative token mass
-    crosses half the corpus.  The oracle brute-forces the cumulative
-    weight with a global window -- affordable for DuckDB at test SF,
-    exactly the plan the distributed form exists to avoid."""
+    rounds narrow until the chosen bucket is the one length whose
+    cumulative token mass crosses half the corpus.  The total, the
+    target and the selector's bounds come from one aggregation; the
+    one-row answer lands as a local relation.  The oracle brute-forces
+    the cumulative weight with a global window -- affordable for
+    DuckDB at test SF, exactly the plan the distributed form exists to
+    avoid."""
     from ..operators.selection import rank_select
 
     d = _docs(spark, sf_dir)
     v = d.select(
         F.size(_toks(F.col("text"))).cast("bigint").alias("c")
-    ).select("c", F.col("c").alias("w")).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
 
     t = v.agg(
         F.sum("c").cast("bigint").alias("total_tokens"),
         F.expr("(sum(c) + 1) div 2").cast("bigint").alias("target_w"),
-    )
-    ranks = t.select(
-        F.lit("wmed").alias("qid"), F.col("target_w").alias("rank")
-    )
-    sel = rank_select(v, ranks, rounds=2, bins=64, weight="w")
-    return t.crossJoin(
-        F.broadcast(sel.select(F.col("value").alias("median_token_doc_len")))
+        F.min("c").alias("lo"),
+        F.max("c").alias("hi"),
+    ).first()
+    sel = rank_select(v, {"wmed": t.target_w}, (t.lo, t.hi), bins=64, weight="c")
+    return local_frame(
+        spark,
+        [(t.total_tokens, t.target_w, sel["wmed"])] if sel else [],
+        "total_tokens bigint, target_w bigint, median_token_doc_len bigint",
     )
 
 

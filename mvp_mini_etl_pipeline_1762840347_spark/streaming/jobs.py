@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..io import local_frame
+from ..io import local_frame, read_parquet
 
 # Fallback stream schema for TIMESTAMP(NANOS) landing files, which
 # Spark's vectorized reader only surfaces as raw longs (see
@@ -68,7 +68,7 @@ def stream_events(
         probe = schema
     else:
         try:
-            probe = spark.read.parquet(events_dir).schema
+            probe = read_parquet(spark, events_dir).schema
         except Exception as exc:
             raise ValueError(
                 f"cannot probe the ts layout of {events_dir!r} (no parquet"
@@ -451,7 +451,7 @@ def incremental_dedup_stream(
 
     def _step(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        store = spark.read.parquet(store_path)
+        store = read_parquet(spark, store_path)
         pairs, new_sigs = incremental_lsh_candidates(store, batch_df)
         exactly_once_table_merge(
             spark, pairs_path, batch_id,
@@ -501,7 +501,7 @@ def span_rewrite_stream(
 
     def _step(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        store = spark.read.parquet(store_path)
+        store = read_parquet(spark, store_path)
         spans = span_frame(batch_df)
         batch_firsts = span_firsts(spans)
         combined = (
@@ -598,7 +598,7 @@ def exactly_once_table_merge(
             return None  # replayed batch: already merged, exactly-once no-op
         # only explicit absence means "first batch"; a corrupt/unreadable
         # table must abort the batch, not silently reset the state
-        target = spark.read.parquet(path) if os.path.exists(path) else None
+        target = read_parquet(spark, path) if os.path.exists(path) else None
         return merge_fn(target), str(batch_id)
 
     return _staged_swap(path, _build, "_BATCH_ID")
@@ -808,7 +808,7 @@ def running_tokens_step(
         ).alias("running_total"),
     ).write.mode("overwrite").parquet(out_dir)
     # the last doc's inclusive total IS offset + batch token sum
-    m = spark.read.parquet(out_dir).agg(F.max("running_total")).first()[0]
+    m = read_parquet(spark, out_dir).agg(F.max("running_total")).first()[0]
     new_offset = int(m) if m is not None else state["offset"]
     _atomic_write(
         state_path, json.dumps({"batch_id": batch_id, "offset": new_offset})

@@ -21,3 +21,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(call)`` -> (``call()``'s result, the number of Spark
+    jobs it launched), counted from ``statusTracker`` under a fresh job
+    group once the listener bus has delivered every job event."""
+    import itertools
+
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def run(call):
+        group = f"count-jobs-{id(run)}-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

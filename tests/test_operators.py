@@ -473,3 +473,21 @@ def test_skyline_parts_is_exact_dominance_set(spark, sf_dir):
     }
     assert got == want
     assert got, "degenerate frontier"
+
+
+def test_connected_components_raises_past_the_round_cap(spark):
+    """A label moves one hop per round: a path longer than MAX_ITERS
+    hops cannot converge in the cap and must raise, not return
+    unconverged labels; a shorter path still converges exactly."""
+    from mvp_mini_etl_pipeline_1762840347_spark.plans import graph
+
+    def path(n):
+        return spark.createDataFrame(
+            [(i, i + 1) for i in range(n)], "a bigint, b bigint"
+        )
+
+    n = graph.MAX_ITERS + 5
+    with pytest.raises(RuntimeError, match="still changing"):
+        graph.connected_components(path(n), "a", "b").collect()
+    labels = graph.connected_components(path(6), "a", "b").collect()
+    assert sorted((r.node, r.cluster_id) for r in labels) == [(i, 0) for i in range(7)]

@@ -437,6 +437,28 @@ def test_fan_out_failure_names_member_after_all_finish():
     assert fan_out({"a": ok("a", 0.0), "b": ok("b", 0.0)}) == {"a": "a", "b": "b"}
 
 
+def test_fan_out_members_inherit_job_group(spark, count_jobs):
+    """fan_out members run under the caller's job group, so their jobs
+    attribute to the query (and cancel with it) instead of running
+    with no group."""
+    from mvp_mini_etl_pipeline_1762840347_spark.plans.fragments import fan_out
+
+    sc = spark.sparkContext
+
+    def member() -> str | None:
+        spark.range(3).count()
+        return sc.getLocalProperty("spark.jobGroup.id")
+
+    def caller():
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        return group, fan_out({"a": member, "b": member, "c": member})
+
+    (group, got), jobs = count_jobs(caller)
+    assert group is not None
+    assert got == {"a": group, "b": group, "c": group}
+    assert jobs >= 3  # the members' count() jobs ran in the caller's group
+
+
 def test_day2_evolved_equals_day2_rebuilt(spark):
     """End-to-end: the registered day-2 query (evolved state) returns
     the same rows as the identical pass against a rebuilt v1.5 state
