@@ -96,7 +96,9 @@ def _stamp(path: str) -> tuple:
     return tuple(sorted(out))
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet(
+    spark: SparkSession, path: str, *, schema: StructType | None = None
+) -> DataFrame:
     """``spark.read.parquet(path)`` without its schema-inference job
     after the first read of ``path``.
 
@@ -107,13 +109,22 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     the files but launches no job.  A changed file, an added or
     removed one, or a flipped conf re-infers and replaces the entry.
     A missing path is read as given, so it fails as Spark's reader
-    does."""
+    does.
+
+    ``schema`` is the schema of the frame the caller just wrote to
+    ``path`` with Spark: the first read then takes it instead of
+    inferring, and memoizes it.  A file source makes a given schema
+    nullable throughout, as Spark writes parquet, so the read plans
+    exactly like an inferred one."""
     stamp = _stamp(path)
     key = (stamp, tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
     hit = _SCHEMAS.get(path)
     if stamp and hit is not None and hit[0] == key:
         return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
+    if schema is not None:
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
     if stamp:
         _SCHEMAS[path] = (key, df.schema)
     return df

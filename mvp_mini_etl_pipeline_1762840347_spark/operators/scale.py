@@ -7,6 +7,14 @@ less (partition pruning), or becomes incrementally maintainable
 asserts on the physical plan (`Exchange` absence, `PartitionFilters`)
 -- not just on values.
 
+Two merge algebras live here, one helper each:
+
+* replace-merge, ``merge_upsert``: a matched key takes the update's
+  row (incremental load of a dimension or fact);
+* fold-merge, ``fold``: a state of commutative aggregates absorbs a
+  batch's partial aggregates by re-applying the same reductions over
+  ``delta UNION state`` (every exactly-once stream state table).
+
 The reference has no physical layer at all (SURVEY §4: eager JS array
 passes); these are the Spark-native answers to what its dataflow
 would need at cluster scale.
@@ -124,7 +132,7 @@ def read_pruned(
 
 
 # ---------------------------------------------------------------------------
-# Merge / upsert (incremental load)
+# Merge: replace (upsert) and fold (aggregate state), the two algebras
 # ---------------------------------------------------------------------------
 def merge_upsert(
     target: DataFrame, updates: DataFrame, key: str
@@ -150,6 +158,40 @@ def merge_upsert(
         for c in target.columns
     ]
     return joined.select(*cols)
+
+
+def fold(delta: DataFrame, keys: list[str], **reducers):
+    """``merge_fn(target)`` folding ``delta`` into a state table of
+    commutative aggregates: ``merge_fn(None)`` is ``delta`` itself (the
+    first batch), and ``merge_fn(target)`` re-applies each value
+    column's reduction over ``delta UNION target`` grouped on ``keys``
+    -- the DBSP view of an aggregate state, where merging a delta is
+    the aggregate itself applied again.
+
+    ``reducers`` maps every non-key column of ``delta`` to a function
+    of its name returning the aggregate Column (``F.sum``, ``F.min``,
+    ``F.max``, ``F.bit_or``, ``F.bit_xor``, or a lambda such as
+    ``lambda c: F.min_by(c, "first_key")``).  Aggregates skip nulls and
+    ``groupBy`` groups null keys, so the folded state equals the batch
+    aggregate over every row folded in: an all-null total stays null,
+    a null key keeps one row.  ``keys=[]`` folds a one-row global
+    state.  The output carries exactly ``delta``'s column names, order
+    and types, so a state table's schema cannot drift across batches.
+    """
+
+    def _merge(target: DataFrame | None) -> DataFrame:
+        if target is None:
+            return delta
+        folded = (
+            delta.unionByName(target)
+            .groupBy(*keys)
+            .agg(*[red(c).alias(c) for c, red in reducers.items()])
+        )
+        return folded.select(
+            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in delta.schema]
+        )
+
+    return _merge
 
 
 # ---------------------------------------------------------------------------

@@ -353,6 +353,7 @@ class SnapshotSet:
         materialized store (columnar re-read, no lineage re-execution)
         and the eventual commit republishes these exact bytes (the
         staged directory IS the committed one; nothing is rewritten).
+        The read-back takes ``df``'s schema, so it runs no footer job.
         """
         tdir = os.path.join(self.root, name)
         os.makedirs(tdir, exist_ok=True)
@@ -362,9 +363,10 @@ class SnapshotSet:
             if n.startswith("snapshot-") and n.split("-", 1)[1].isdigit()
         ]
         snap = f"snapshot-{max(taken) + 1 if taken else 0}"
-        df.write.mode("overwrite").parquet(os.path.join(tdir, snap))
+        path = os.path.join(tdir, snap)
+        df.write.mode("overwrite").parquet(path)
         self._staged[name] = snap
-        return read_parquet(self.spark, os.path.join(tdir, snap))
+        return read_parquet(self.spark, path, schema=df.schema)
 
     def commit_staged(self, marker: int | None = None) -> str:
         """Publish every staged member (plus carried-forward live

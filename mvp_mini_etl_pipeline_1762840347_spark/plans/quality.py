@@ -2559,8 +2559,8 @@ def _evolve_state(
                re-run's output; untouched components can't change
                membership (no retracted doc, no new-pair endpoint).
       doc_sh / inv_idx   retracted out, batch in (per-doc pure).
-      eval_sh  refcount z-set: n' = n - removed + added, rows at 0
-               drop out.
+      eval_sh  refcount z-set: added (+n) and removed (-n) refcounts
+               fold into n by sum, rows at 0 drop out.
 
     Snapshot staging is copy-on-write at table grain (the stand-in's
     honest cost); at deploy the identical MERGEs land as
@@ -2585,7 +2585,7 @@ def _evolve_state(
     IN the same transaction as the evolution, which is exactly the
     deploy shape (one multi-table txn across all eight tables).
     """
-    from ..operators.scale import merge_upsert
+    from ..operators.scale import fold, merge_upsert
     from ..operators.table_format import SnapshotSet
     from .dedup import _EVAL_SOURCE
 
@@ -2678,21 +2678,15 @@ def _evolve_state(
             )
         ),
     )
-    n2 = (
-        F.coalesce("n", F.lit(0))
-        - F.coalesce("rem_n", F.lit(0))
-        + F.coalesce("add_n", F.lit(0))
+    sh_delta = frames["add_sh"].select("shingle", F.col("add_n").alias("n"))
+    sh_delta = sh_delta.unionByName(
+        frames["rem_sh"].select("shingle", (-F.col("rem_n")).alias("n"))
     )
     _commit(
         "eval_sh",
-        state["eval_sh"]
-        .join(
-            frames["rem_sh"].join(frames["add_sh"], "shingle", "full_outer"),
-            "shingle",
-            "full_outer",
-        )
-        .select("shingle", n2.cast("bigint").alias("n"))
-        .filter(F.col("n") > 0),
+        fold(sh_delta, ["shingle"], n=F.sum)(state["eval_sh"]).filter(
+            F.col("n") > 0
+        ),
     )
     if diff_merge is not None:
         live = sset.tables()

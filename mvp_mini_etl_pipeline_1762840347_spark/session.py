@@ -44,22 +44,6 @@ def get_spark(app_name: str = "mvp_mini_etl_spark", cpus: int | None = None) -> 
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Per-file open-cost charge used when packing files into scan
-        # splits, env-overridable for scan-parallelism A/B probes (the
-        # round-12 scheduler-floor experiment).  The DEFAULT stays
-        # Spark's 4 MB: lowering it to 512 KB splits the small
-        # single-file sf0.1 tables across more cores (the 10.8 MB
-        # lineitem file scans on 3 tasks under the default) and was
-        # measured to speed large single-table groupBys 1.3-1.7x, but
-        # costs the ~200 sub-second queries a few extra task launches
-        # each -- registry-wide the two effects cancel (43.3 s vs
-        # 42.9 s over a 25-query probe subset, within ambient noise),
-        # so shipping a non-default value would be a local[32]-only
-        # twiddle.  See OPTIMIZATION_r12.md "scheduler floor".
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST", str(4 * 1024 * 1024)),
-        )
         .config("spark.ui.enabled", "false")
     )
     if not os.environ.get("SPARK_GRAFT_NO_MASTER"):

@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..io import local_frame, read_parquet
+from ..operators.scale import fold
 
 # Fallback stream schema for TIMESTAMP(NANOS) landing files, which
 # Spark's vectorized reader only surfaces as raw longs (see
@@ -185,6 +186,17 @@ def _drive(stream: DataFrame, checkpoint: str, step) -> StreamingQuery:
     )
 
 
+def _user_totals_merge(batch_df: DataFrame):
+    """``merge_fn(target)`` folding one micro-batch's per-user
+    (n_events, total_value) partials into the per-user state -- the
+    merge both per-user state twins commit."""
+    delta = batch_df.groupBy("user_id").agg(
+        F.count("*").alias("n_events"),
+        F.sum("value").alias("total_value"),
+    )
+    return fold(delta, ["user_id"], n_events=F.sum, total_value=F.sum)
+
+
 def merge_stream_into_parquet(
     spark: SparkSession, events: DataFrame, target_path: str
 ) -> StreamingQuery:
@@ -195,7 +207,7 @@ def merge_stream_into_parquet(
     the additive variant running totals need).
 
     foreachBatch gives exactly-once-per-batch batch semantics inside a
-    stream: the merge join + overwrite is ordinary batch code routed
+    stream: the fold + overwrite is ordinary batch code routed
     through exactly_once_table_merge (replay guard, explicit
     missing-path check so IO errors abort instead of resetting the
     totals, staged-swap so the overwrite never races its own read).
@@ -203,34 +215,9 @@ def merge_stream_into_parquet(
     parquet here keeps the harness dependency-free."""
 
     def _step(batch_df: DataFrame, batch_id: int) -> None:
-        def _merge(target: DataFrame | None) -> DataFrame:
-            delta = batch_df.groupBy("user_id").agg(
-                F.count("*").alias("n_events"),
-                F.sum("value").alias("total_value"),
-            )
-            if target is None:
-                return delta
-            t = target.select(
-                F.col("user_id").alias("t_user"),
-                F.col("n_events").alias("t_n"),
-                F.col("total_value").alias("t_v"),
-            )
-            return (
-                delta.join(t, delta.user_id == t.t_user, "full_outer")
-                .select(
-                    F.coalesce(delta.user_id, t.t_user).alias("user_id"),
-                    (
-                        F.coalesce(delta.n_events, F.lit(0))
-                        + F.coalesce(t.t_n, F.lit(0))
-                    ).alias("n_events"),
-                    (
-                        F.coalesce(delta.total_value, F.lit(0.0))
-                        + F.coalesce(t.t_v, F.lit(0.0))
-                    ).alias("total_value"),
-                )
-            )
-
-        exactly_once_table_merge(spark, target_path, batch_id, _merge)
+        exactly_once_table_merge(
+            spark, target_path, batch_id, _user_totals_merge(batch_df)
+        )
 
     return _drive(events, target_path + "_chk", _step)
 
@@ -533,8 +520,8 @@ def hourly_rollup_stream(
     (the hypertable pattern: raw events are read once, ever; every
     coarser grain derives from the partials).  Only algebraic state
     is kept (count + sum; avg derives at read), so merge order never
-    matters and backfill equals live.  Same additive full-outer merge
-    as merge_stream_into_parquet, keyed on the window instead of the
+    matters and backfill equals live.  Same additive fold as
+    merge_stream_into_parquet, keyed on the window instead of the
     user, hardened three ways: (1) only an explicitly MISSING table
     reads as "first batch" -- any other read failure (corrupt footer,
     transient IO) re-raises and aborts the batch, because treating it
@@ -613,41 +600,13 @@ def hourly_rollup_merge_step(
     no-op.  Replay guard / staged swap live in
     exactly_once_table_merge."""
 
-    def _merge(target: DataFrame | None) -> DataFrame:
-        delta = batch_df.groupBy(
-            F.date_trunc("hour", "ts").alias("hour"), "event_type"
-        ).agg(F.count("*").alias("pc"), F.sum("value").alias("pv"))
-        if target is None:
-            return delta
-        t = target.select(
-            F.col("hour").alias("t_hour"),
-            F.col("event_type").alias("t_type"),
-            F.col("pc").alias("t_pc"),
-            F.col("pv").alias("t_pv"),
-        )
-        merged = (
-            delta.join(
-                t,
-                (delta.hour == t.t_hour)
-                & (delta.event_type == t.t_type),
-                "full_outer",
-            )
-            .select(
-                F.coalesce(delta.hour, t.t_hour).alias("hour"),
-                F.coalesce(delta.event_type, t.t_type).alias("event_type"),
-                (
-                    F.coalesce(delta.pc, F.lit(0))
-                    + F.coalesce(t.t_pc, F.lit(0))
-                ).alias("pc"),
-                (
-                    F.coalesce(delta.pv, F.lit(0.0))
-                    + F.coalesce(t.t_pv, F.lit(0.0))
-                ).alias("pv"),
-            )
-        )
-        return merged
-
-    return exactly_once_table_merge(spark, hourly_path, batch_id, _merge)
+    delta = batch_df.groupBy(
+        F.date_trunc("hour", "ts").alias("hour"), "event_type"
+    ).agg(F.count("*").alias("pc"), F.sum("value").alias("pv"))
+    return exactly_once_table_merge(
+        spark, hourly_path, batch_id,
+        fold(delta, ["hour", "event_type"], pc=F.sum, pv=F.sum),
+    )
 
 
 def hll_rollup_stream(
@@ -677,17 +636,11 @@ def hll_rollup_merge_step(
     / staged swap live in exactly_once_table_merge."""
     from ..plans.sketches import hll_registers
 
-    def _merge(target: DataFrame | None) -> DataFrame:
-        delta = hll_registers(batch_df, "event_type", F.col("user_id"))
-        if target is None:
-            return delta
-        return (
-            delta.unionByName(target)
-            .groupBy("event_type", "bucket")
-            .agg(F.max("m_j").alias("m_j"))
-        )
-
-    return exactly_once_table_merge(spark, regs_path, batch_id, _merge)
+    delta = hll_registers(batch_df, "event_type", F.col("user_id"))
+    return exactly_once_table_merge(
+        spark, regs_path, batch_id,
+        fold(delta, ["event_type", "bucket"], m_j=F.max),
+    )
 
 
 def daily_from_hourly(hourly: DataFrame) -> DataFrame:
@@ -894,28 +847,9 @@ def snapshot_merge_step(table, batch_df: DataFrame, batch_id: int) -> bool:
     applied = table.applied_batch()
     if applied is not None and batch_id <= applied:
         return False  # retried batch: already committed, exactly-once no-op
-    delta = batch_df.groupBy("user_id").agg(
-        F.count("*").alias("n_events"),
-        F.sum("value").alias("total_value"),
+    merged = _user_totals_merge(batch_df)(
+        None if table.current_snapshot() is None else table.read()
     )
-    if table.current_snapshot() is None:
-        merged = delta
-    else:
-        t = table.read().select(
-            F.col("user_id").alias("t_user"),
-            F.col("n_events").alias("t_n"),
-            F.col("total_value").alias("t_v"),
-        )
-        merged = delta.join(t, delta.user_id == t.t_user, "full_outer").select(
-            F.coalesce(delta.user_id, t.t_user).alias("user_id"),
-            (
-                F.coalesce(delta.n_events, F.lit(0)) + F.coalesce(t.t_n, F.lit(0))
-            ).alias("n_events"),
-            (
-                F.coalesce(delta.total_value, F.lit(0.0))
-                + F.coalesce(t.t_v, F.lit(0.0))
-            ).alias("total_value"),
-        )
     # commit() writes the new snapshot BEFORE swapping the pointer, so
     # the read above never races its own overwrite (unlike the plain-
     # parquet variant, no cache barrier needed).
@@ -1118,62 +1052,31 @@ def m4_state(events: DataFrame) -> DataFrame:
     )
 
 
+# The reductions of every m4_state column: re-applied over two states
+# they give the state of the union of their events (the partition-
+# invariance law tests/test_properties.py checks through this dict).
+M4_REDUCERS = {
+    "n_points": F.sum,
+    "v_min": F.min,
+    "v_max": F.max,
+    "first_key": F.min,
+    "v_first": lambda c: F.min_by(c, F.col("first_key")),
+    "last_key": F.max,
+    "v_last": lambda c: F.max_by(c, F.col("last_key")),
+}
+
+
 def m4_merge_step(
     spark: SparkSession, batch_df: DataFrame, batch_id: int, path: str
 ) -> bool:
     """One M4-state merge micro-batch: count adds, min/max fold, and
-    first/last resolve by comparing the carried keys -- all algebraic,
-    so merge order never matters and backfill equals live.  Replay
-    guard / staged swap live in exactly_once_table_merge."""
-
-    def _merge(target: DataFrame | None) -> DataFrame:
-        delta = m4_state(batch_df)
-        if target is None:
-            return delta
-        t = target.select(
-            F.col("bucket").alias("t_bucket"),
-            *[
-                F.col(c).alias(f"t_{c}")
-                for c in (
-                    "n_points", "v_min", "v_max",
-                    "first_key", "v_first", "last_key", "v_last",
-                )
-            ],
-        )
-        d_first = F.col("t_first_key").isNull() | (
-            F.col("first_key").isNotNull()
-            & (F.col("first_key") < F.col("t_first_key"))
-        )
-        d_last = F.col("t_last_key").isNull() | (
-            F.col("last_key").isNotNull()
-            & (F.col("last_key") > F.col("t_last_key"))
-        )
-        return (
-            delta.join(t, delta.bucket == t.t_bucket, "full_outer")
-            .select(
-                F.coalesce(delta.bucket, t.t_bucket).alias("bucket"),
-                (
-                    F.coalesce(F.col("n_points"), F.lit(0))
-                    + F.coalesce(F.col("t_n_points"), F.lit(0))
-                ).alias("n_points"),
-                F.least("v_min", "t_v_min").alias("v_min"),
-                F.greatest("v_max", "t_v_max").alias("v_max"),
-                F.when(d_first, F.col("first_key"))
-                .otherwise(F.col("t_first_key"))
-                .alias("first_key"),
-                F.when(d_first, F.col("v_first"))
-                .otherwise(F.col("t_v_first"))
-                .alias("v_first"),
-                F.when(d_last, F.col("last_key"))
-                .otherwise(F.col("t_last_key"))
-                .alias("last_key"),
-                F.when(d_last, F.col("v_last"))
-                .otherwise(F.col("t_v_last"))
-                .alias("v_last"),
-            )
-        )
-
-    return exactly_once_table_merge(spark, path, batch_id, _merge)
+    first/last resolve by the carried keys (``min_by``/``max_by``) --
+    all algebraic, so merge order never matters and backfill equals
+    live.  Replay guard / staged swap live in
+    exactly_once_table_merge."""
+    return exactly_once_table_merge(
+        spark, path, batch_id, fold(m4_state(batch_df), ["bucket"], **M4_REDUCERS)
+    )
 
 
 def m4_stream(
@@ -1234,32 +1137,14 @@ def bitmap_merge_step(
     spark: SparkSession, batch_df: DataFrame, batch_id: int, path: str
 ) -> bool:
     """One bitmap-index micro-batch: the batch's word bitmaps OR into
-    the persisted index (full-outer on word, bitwise OR, missing side
-    = 0).  OR is idempotent per bit and commutative/associative per
-    word, so merge order never matters; the batch-id replay guard and
-    staged swap live in exactly_once_table_merge."""
-
-    def _merge(target: DataFrame | None) -> DataFrame:
-        delta = bitmap_state(batch_df)
-        if target is None:
-            return delta
-        t = target.select(
-            F.col("word").alias("t_word"),
-            F.col("bm_a").alias("t_bm_a"),
-            F.col("bm_b").alias("t_bm_b"),
-        )
-        z = F.lit(0).cast("bigint")
-        return delta.join(t, delta.word == t.t_word, "full_outer").select(
-            F.coalesce(delta.word, t.t_word).alias("word"),
-            F.coalesce(F.col("bm_a"), z)
-            .bitwiseOR(F.coalesce(F.col("t_bm_a"), z))
-            .alias("bm_a"),
-            F.coalesce(F.col("bm_b"), z)
-            .bitwiseOR(F.coalesce(F.col("t_bm_b"), z))
-            .alias("bm_b"),
-        )
-
-    return exactly_once_table_merge(spark, path, batch_id, _merge)
+    the persisted index (``bit_or`` per word).  OR is idempotent per
+    bit and commutative/associative per word, so merge order never
+    matters and a replay could not corrupt the index; the batch-id
+    replay guard and staged swap live in exactly_once_table_merge."""
+    return exactly_once_table_merge(
+        spark, path, batch_id,
+        fold(bitmap_state(batch_df), ["word"], bm_a=F.bit_or, bm_b=F.bit_or),
+    )
 
 
 def bitmap_index_stream(
@@ -1300,30 +1185,12 @@ def auc_merge_step(
     spark: SparkSession, batch_df: DataFrame, batch_id: int, path: str
 ) -> bool:
     """One AUC-state micro-batch: the batch's (score, p, q) marginals
-    ADD into the persisted state (full-outer on score, missing side =
-    0) under the shared batch-id replay guard and staged swap."""
-
-    def _merge(target: DataFrame | None) -> DataFrame:
-        delta = auc_state(batch_df)
-        if target is None:
-            return delta
-        t = target.select(
-            F.col("score").alias("t_score"),
-            F.col("p").alias("t_p"),
-            F.col("q").alias("t_q"),
-        )
-        z = F.lit(0).cast("bigint")
-        return delta.join(t, delta.score == t.t_score, "full_outer").select(
-            F.coalesce(delta.score, t.t_score).alias("score"),
-            (F.coalesce(F.col("p"), z) + F.coalesce(F.col("t_p"), z)).alias(
-                "p"
-            ),
-            (F.coalesce(F.col("q"), z) + F.coalesce(F.col("t_q"), z)).alias(
-                "q"
-            ),
-        )
-
-    return exactly_once_table_merge(spark, path, batch_id, _merge)
+    ADD into the persisted state (``sum`` per score).  Addition is not
+    idempotent, so the shared batch-id replay guard is load-bearing;
+    it and the staged swap live in exactly_once_table_merge."""
+    return exactly_once_table_merge(
+        spark, path, batch_id, fold(auc_state(batch_df), ["score"], p=F.sum, q=F.sum)
+    )
 
 
 def auc_render(state: DataFrame) -> DataFrame:
@@ -1389,37 +1256,16 @@ def psi_drift_merge_step(
     spark: SparkSession, batch_df: DataFrame, batch_id: int, counts_path: str
 ) -> bool:
     """One exactly-once merge of a micro-batch into the PSI drift
-    count state (bin, n_a, n_b) -- purely additive, so the merge is
-    the same full-outer coalesce-sum as the hourly rollup, under the
-    shared replay-guarded staged-swap commit.  Exposed for direct
-    replay/crash testing; returns False on a replayed no-op."""
+    count state (bin, n_a, n_b) -- both counts ``sum`` per bin, which
+    is not idempotent, so the shared replay guard is load-bearing.
+    Exposed for direct replay/crash testing; returns False on a
+    replayed no-op."""
     from ..plans.analytics import drift_counts_frame
 
-    def _merge(target: DataFrame | None) -> DataFrame:
-        delta = drift_counts_frame(batch_df)
-        if target is None:
-            return delta
-        t = target.select(
-            F.col("bin").alias("t_bin"),
-            F.col("n_a").alias("t_na"),
-            F.col("n_b").alias("t_nb"),
-        )
-        return (
-            delta.join(t, delta.bin == t.t_bin, "full_outer")
-            .select(
-                F.coalesce(delta.bin, t.t_bin).alias("bin"),
-                (
-                    F.coalesce(delta.n_a, F.lit(0))
-                    + F.coalesce(t.t_na, F.lit(0))
-                ).alias("n_a"),
-                (
-                    F.coalesce(delta.n_b, F.lit(0))
-                    + F.coalesce(t.t_nb, F.lit(0))
-                ).alias("n_b"),
-            )
-        )
-
-    return exactly_once_table_merge(spark, counts_path, batch_id, _merge)
+    return exactly_once_table_merge(
+        spark, counts_path, batch_id,
+        fold(drift_counts_frame(batch_df), ["bin"], n_a=F.sum, n_b=F.sum),
+    )
 
 
 def psi_drift_stream(
@@ -1446,38 +1292,15 @@ def ks_drift_merge_step(
     spark: SparkSession, batch_df: DataFrame, batch_id: int, counts_path: str
 ) -> bool:
     """One exactly-once merge of a micro-batch of documents into the
-    KS drift count state (v, a_cnt, b_cnt) -- purely additive per
-    value, same full-outer coalesce-sum as the PSI state, under the
-    shared replay-guarded staged-swap commit.  Returns False on a
-    replayed no-op."""
+    KS drift count state (v, a_cnt, b_cnt) -- both counts ``sum`` per
+    value, which is not idempotent, so the shared replay guard is
+    load-bearing.  Returns False on a replayed no-op."""
     from ..plans.analytics import ks_counts_frame
 
-    def _merge(target: DataFrame | None) -> DataFrame:
-        delta = ks_counts_frame(batch_df)
-        if target is None:
-            return delta
-        t = target.select(
-            F.col("v").alias("t_v"),
-            F.col("a_cnt").alias("t_a"),
-            F.col("b_cnt").alias("t_b"),
-        )
-        return delta.join(t, delta.v == t.t_v, "full_outer").select(
-            F.coalesce(delta.v, t.t_v).alias("v"),
-            (
-                F.coalesce(delta.a_cnt, F.lit(0))
-                + F.coalesce(t.t_a, F.lit(0))
-            )
-            .cast("bigint")
-            .alias("a_cnt"),
-            (
-                F.coalesce(delta.b_cnt, F.lit(0))
-                + F.coalesce(t.t_b, F.lit(0))
-            )
-            .cast("bigint")
-            .alias("b_cnt"),
-        )
-
-    return exactly_once_table_merge(spark, counts_path, batch_id, _merge)
+    return exactly_once_table_merge(
+        spark, counts_path, batch_id,
+        fold(ks_counts_frame(batch_df), ["v"], a_cnt=F.sum, b_cnt=F.sum),
+    )
 
 
 def ks_drift_stream(
@@ -1543,53 +1366,23 @@ def zset_mv_merge_step(
     the shared replay-guarded staged-swap commit; returns False on a
     replayed no-op."""
 
-    def _merge(target: DataFrame | None) -> DataFrame:
-        delta = batch_df.groupBy("priority").agg(
-            F.sum("w").cast("bigint").alias("dn"),
-            F.sum(F.col("w") * F.col("cents")).cast("bigint").alias("ds"),
-            F.sum(F.when(F.col("w") > 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("ins"),
-            F.sum(F.when(F.col("w") < 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("ret"),
-        )
-        z = F.lit(0).cast("bigint")
-        if target is None:
-            return delta.select(
-                "priority",
-                F.col("dn").alias("n_live"),
-                F.col("ds").alias("revenue_cents"),
-                F.col("ins").alias("inserted_rows"),
-                F.col("ret").alias("retracted_rows"),
-            )
-        t = target.select(
-            F.col("priority").alias("t_p"),
-            "n_live",
-            "revenue_cents",
-            "inserted_rows",
-            "retracted_rows",
-        )
-        return (
-            delta.join(t, delta.priority == t.t_p, "full_outer")
-            .select(
-                F.coalesce(delta.priority, t.t_p).alias("priority"),
-                (F.coalesce(t.n_live, z) + F.coalesce(delta.dn, z)).alias(
-                    "n_live"
-                ),
-                (
-                    F.coalesce(t.revenue_cents, z) + F.coalesce(delta.ds, z)
-                ).alias("revenue_cents"),
-                (
-                    F.coalesce(t.inserted_rows, z) + F.coalesce(delta.ins, z)
-                ).alias("inserted_rows"),
-                (
-                    F.coalesce(t.retracted_rows, z) + F.coalesce(delta.ret, z)
-                ).alias("retracted_rows"),
-            )
-        )
-
-    return exactly_once_table_merge(spark, mv_path, batch_id, _merge)
+    delta = batch_df.groupBy("priority").agg(
+        F.sum("w").cast("bigint").alias("n_live"),
+        F.sum(F.col("w") * F.col("cents")).cast("bigint").alias("revenue_cents"),
+        F.sum(F.when(F.col("w") > 0, 1).otherwise(0))
+        .cast("bigint")
+        .alias("inserted_rows"),
+        F.sum(F.when(F.col("w") < 0, 1).otherwise(0))
+        .cast("bigint")
+        .alias("retracted_rows"),
+    )
+    return exactly_once_table_merge(
+        spark, mv_path, batch_id,
+        fold(
+            delta, ["priority"], n_live=F.sum, revenue_cents=F.sum,
+            inserted_rows=F.sum, retracted_rows=F.sum,
+        ),
+    )
 
 
 def zset_mv_render(state: DataFrame) -> DataFrame:
@@ -1627,32 +1420,15 @@ def waterfill_merge_step(
     spark: SparkSession, batch_df: DataFrame, batch_id: int, state_path: str
 ) -> bool:
     """One exactly-once merge of a documents micro-batch into the
-    per-source token census (source, avail) -- purely additive, same
-    full-outer coalesce-sum discipline as the PSI drift state, under
-    the shared replay-guarded staged-swap commit.  Returns False on a
-    replayed no-op."""
+    per-source token census (source, avail) -- ``avail`` sums per
+    source, which is not idempotent, so the shared replay guard is
+    load-bearing.  Returns False on a replayed no-op."""
     from ..plans.quality import source_tokens_frame
 
-    def _merge(target: DataFrame | None) -> DataFrame:
-        delta = source_tokens_frame(batch_df)
-        if target is None:
-            return delta
-        t = target.select(
-            F.col("source").alias("t_source"),
-            F.col("avail").alias("t_avail"),
-        )
-        return (
-            delta.join(t, delta.source == t.t_source, "full_outer")
-            .select(
-                F.coalesce(delta.source, t.t_source).alias("source"),
-                (
-                    F.coalesce(delta.avail, F.lit(0))
-                    + F.coalesce(t.t_avail, F.lit(0))
-                ).cast("bigint").alias("avail"),
-            )
-        )
-
-    return exactly_once_table_merge(spark, state_path, batch_id, _merge)
+    return exactly_once_table_merge(
+        spark, state_path, batch_id,
+        fold(source_tokens_frame(batch_df), ["source"], avail=F.sum),
+    )
 
 
 def waterfill_render(state: DataFrame) -> DataFrame:
@@ -1703,28 +1479,16 @@ def fingerprint_merge_step(
     Returns False on a replayed no-op."""
     from ..plans.warehouse import _FP_MOD, fingerprint_frame
 
-    def _merge(target: DataFrame | None) -> DataFrame:
-        delta = fingerprint_frame(batch_df, _FPS_COLS)
-        if target is None:
-            return delta
-        t = target.select(
-            F.col("n_rows").alias("t_n"),
-            F.col("sum_fp").alias("t_s"),
-            F.col("xor_fp").alias("t_x"),
-        )
-        return delta.crossJoin(t).select(
-            (F.col("n_rows") + F.col("t_n")).cast("bigint").alias("n_rows"),
-            (
-                (
-                    F.col("sum_fp").cast("decimal(38,0)")
-                    + F.col("t_s").cast("decimal(38,0)")
-                )
-                % F.lit(_FP_MOD).cast("decimal(38,0)")
-            ).cast("bigint").alias("sum_fp"),
-            F.expr("xor_fp ^ t_x").cast("bigint").alias("xor_fp"),
-        )
-
-    return exactly_once_table_merge(spark, state_path, batch_id, _merge)
+    dec = "decimal(38,0)"
+    return exactly_once_table_merge(
+        spark, state_path, batch_id,
+        fold(
+            fingerprint_frame(batch_df, _FPS_COLS), [],
+            n_rows=F.sum,
+            sum_fp=lambda c: F.sum(F.col(c).cast(dec)) % F.lit(_FP_MOD).cast(dec),
+            xor_fp=F.bit_xor,
+        ),
+    )
 
 
 def fingerprint_stream(
@@ -1779,12 +1543,7 @@ def spacesaving_merge_step(
     err_row = err.select("shard", "e").localCheckpoint(eager=True)
 
     applied = exactly_once_table_merge(
-        spark, summary_path, batch_id,
-        lambda t: delta if t is None else (
-            t.unionByName(delta)
-            .groupBy("item")
-            .agg(F.sum("cc").cast("bigint").alias("cc"))
-        ),
+        spark, summary_path, batch_id, fold(delta, ["item"], cc=F.sum)
     )
     exactly_once_table_merge(
         spark, err_path, batch_id,
@@ -1821,57 +1580,24 @@ def release_manifest_merge_step(
 ) -> bool:
     """One exactly-once merge of a documents micro-batch into the
     per-source release manifest: every column is a commutative/
-    associative reduction (count, sums, min/max, XOR fingerprint), so
-    the per-batch manifest delta MERGES into the running table via a
-    full-outer join on source -- counts add, ranges widen, and the
-    XOR fingerprint composes because XOR is self-inverse (this is the
-    property release_manifest's docstring sells: adding a document is
-    one XOR, no rescan).  Like the fingerprint stream, the merge is
-    additive rather than idempotent, so the shared batch-id
-    high-water mark is load-bearing.  Returns False on a replay."""
+    associative reduction, so the per-batch manifest folds into the
+    running table per source -- counts ``sum``, the doc-id range
+    widens by ``min``/``max``, and the fingerprint composes by
+    ``bit_xor`` because XOR is self-inverse (this is the property
+    release_manifest's docstring sells: adding a document is one XOR,
+    no rescan).  Like the fingerprint stream, the merge is additive
+    rather than idempotent, so the shared batch-id high-water mark is
+    load-bearing.  Returns False on a replay."""
     from ..plans.scrub import manifest_frame
 
-    def _merge(target: DataFrame | None) -> DataFrame:
-        delta = manifest_frame(batch_df)
-        if target is None:
-            return delta
-        t = target.select(
-            F.col("source"),
-            F.col("n_docs").alias("t_docs"),
-            F.col("n_tokens").alias("t_tok"),
-            F.col("n_chars").alias("t_ch"),
-            F.col("min_doc_id").alias("t_min"),
-            F.col("max_doc_id").alias("t_max"),
-            F.col("content_fingerprint").alias("t_fp"),
-        )
-        z = F.lit(0).cast("bigint")
-        return delta.join(t, "source", "full_outer").select(
-            "source",
-            (F.coalesce("n_docs", z) + F.coalesce("t_docs", z))
-            .cast("bigint")
-            .alias("n_docs"),
-            (F.coalesce("n_tokens", z) + F.coalesce("t_tok", z))
-            .cast("bigint")
-            .alias("n_tokens"),
-            (F.coalesce("n_chars", z) + F.coalesce("t_ch", z))
-            .cast("bigint")
-            .alias("n_chars"),
-            F.least(
-                F.coalesce("min_doc_id", "t_min"),
-                F.coalesce("t_min", "min_doc_id"),
-            ).alias("min_doc_id"),
-            F.greatest(
-                F.coalesce("max_doc_id", "t_max"),
-                F.coalesce("t_max", "max_doc_id"),
-            ).alias("max_doc_id"),
-            F.expr(
-                "coalesce(content_fingerprint, 0L) ^ coalesce(t_fp, 0L)"
-            )
-            .cast("bigint")
-            .alias("content_fingerprint"),
-        )
-
-    return exactly_once_table_merge(spark, state_path, batch_id, _merge)
+    return exactly_once_table_merge(
+        spark, state_path, batch_id,
+        fold(
+            manifest_frame(batch_df), ["source"],
+            n_docs=F.sum, n_tokens=F.sum, n_chars=F.sum,
+            min_doc_id=F.min, max_doc_id=F.max, content_fingerprint=F.bit_xor,
+        ),
+    )
 
 
 def release_manifest_stream(
@@ -1931,37 +1657,14 @@ def release_diff_merge_fn(batch_changes: DataFrame):
     diff commits atomically WITH the store evolution)."""
     from ..plans.quality import _delta_from_changes
 
-    def _merge(target: DataFrame | None) -> DataFrame:
-        delta = _delta_from_changes(batch_changes)
-        if target is None:
-            return delta
-        adds = (
-            "n_docs_added",
-            "n_docs_removed",
-            "n_resplit_in",
-            "n_resplit_out",
-            "n_docs_delta",
-            "n_tokens_delta",
-        )
-        t = target.select(
-            "split", *[F.col(c).alias(f"t_{c}") for c in adds],
-            F.col("fingerprint_delta").alias("t_fp"),
-        )
-        z = F.lit(0).cast("bigint")
-        return delta.join(t, "split", "full_outer").select(
-            "split",
-            *[
-                (F.coalesce(c, z) + F.coalesce(f"t_{c}", z))
-                .cast("bigint")
-                .alias(c)
-                for c in adds
-            ],
-            F.expr("coalesce(fingerprint_delta, 0L) ^ coalesce(t_fp, 0L)")
-            .cast("bigint")
-            .alias("fingerprint_delta"),
-        )
-
-    return _merge
+    adds = (
+        "n_docs_added", "n_docs_removed", "n_resplit_in", "n_resplit_out",
+        "n_docs_delta", "n_tokens_delta",
+    )
+    return fold(
+        _delta_from_changes(batch_changes), ["split"],
+        **dict.fromkeys(adds, F.sum), fingerprint_delta=F.bit_xor,
+    )
 
 
 def release_delta_stream(

@@ -240,7 +240,11 @@ def test_m4_merge_is_partition_invariant(spark, raw, n_parts):
     """Merging M4 state over ANY partition of the events equals the
     one-shot state -- the algebraic-state law that makes backfill
     equal live for the streaming twin."""
-    from mvp_mini_etl_pipeline_1762840347_spark.streaming.jobs import m4_state
+    from mvp_mini_etl_pipeline_1762840347_spark.operators.scale import fold
+    from mvp_mini_etl_pipeline_1762840347_spark.streaming.jobs import (
+        M4_REDUCERS,
+        m4_state,
+    )
     from pyspark.sql import functions as F
 
     rows = [
@@ -261,24 +265,15 @@ def test_m4_merge_is_partition_invariant(spark, raw, n_parts):
             for r in df_.collect()
         }
 
-    # fold the per-slice states pairwise through the same merge logic
-    # the streaming step uses, via union + re-aggregate on the keys
+    # fold the per-slice states pairwise through the fold and the
+    # reducers m4_merge_step ships
     slices = [
         m4_state(df.filter(F.col("event_id") % n_parts == i))
         for i in range(n_parts)
     ]
     merged = slices[0]
     for s in slices[1:]:
-        u = merged.unionByName(s)
-        merged = u.groupBy("bucket").agg(
-            F.sum("n_points").alias("n_points"),
-            F.min("v_min").alias("v_min"),
-            F.max("v_max").alias("v_max"),
-            F.min("first_key").alias("first_key"),
-            F.min_by("v_first", F.col("first_key")).alias("v_first"),
-            F.max("last_key").alias("last_key"),
-            F.max_by("v_last", F.col("last_key")).alias("v_last"),
-        )
+        merged = fold(s, ["bucket"], **M4_REDUCERS)(merged)
     assert key(merged) == key(oneshot)
 
 
