@@ -1125,28 +1125,18 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     intractable all-pairs problem into per-cluster work that
     parallelizes across the cluster key.  No global cross join
     anywhere."""
-    from .similarity import _dot, _km_assign, _km_seed, _km_vectors
+    from .similarity import _km_assign, _km_seed, _vectors, cosine
 
     # The corpus arrives as one small file locally; spread it so the
     # per-vector argmax and the per-pair folds use every core (at
     # production scale the input partitioning already provides this).
-    v = _km_vectors(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    # Self-dots are per-VECTOR work; computing them before the pair
-    # join turns the per-PAIR cost from 3 array folds into 1 (pairs
-    # outnumber vectors by the per-cluster population).  The norm is
-    # kept as the un-rooted self-dot so the pair expression stays
-    # sqrt(sa*sb) -- the oracle's exact expression tree (sqrt(x)*
-    # sqrt(y) differs from sqrt(x*y) in the last ulps).  The
-    # assignment feeds BOTH pair-join branches: materialize it once
+    v = _vectors(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism)
+    # Each vector carries its self-dot ``s`` from `_vectors`, so a
+    # scored pair costs the cosine kernel's one fold (similarity.py).
+    # The assignment feeds BOTH pair-join branches: materialize it once
     # (persisting the cluster assignment is what a production run
     # does anyway) instead of re-deriving the argmax per branch.
-    assigned = (
-        _km_assign(v, _km_seed(v))
-        .withColumn("s", _dot(F.col("e"), F.col("e")))
-        .localCheckpoint()
-    )
+    assigned = _km_assign(v, _km_seed(v)).localCheckpoint()
     # K is small (the clusters ARE the join key), so an unsalted pair
     # join runs on K tasks no matter how many cores exist.  Salt the
     # left side on vec_id and replicate the right side across salts:
@@ -1170,9 +1160,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("salt_b"),
     )
     cos = F.round(
-        _dot(F.col("e_a"), F.col("e_b"))
-        / F.sqrt(F.col("s_a") * F.col("s_b")),
-        4,
+        cosine(F.col("e_a"), F.col("e_b"), F.col("s_a"), F.col("s_b")), 4
     )
     return (
         a1.join(

@@ -462,20 +462,28 @@ def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("y").cast("bigint").alias("sy"),
         F.sum(F.expr("x * y")).cast("bigint").alias("sxy"),
     )
-    ab = fit.select("*", F.expr(_CFP_B).alias("b"))
-    # The 1-row fit is localCheckpointed: without it the fit's full
-    # train-fold aggregation subtree is re-executed once per consumer
-    # (the broadcast feeding the calibration scores, the broadcast
-    # feeding the test scores, and the n_train column of the final
-    # row) -- three lineitem scans for one number (guide §2.4).
-    fit_row = ab.select("*", F.expr(_CFP_A).alias("a")).localCheckpoint()
-    ab2 = F.broadcast(fit_row)
-    cal = (
-        v.filter(F.col("fold") == 8)
-        .crossJoin(ab2)
-        .select(F.expr(_CFP_SCORE).alias("c"))
-        .localCheckpoint(eager=True)
+    # The one-row fit lands on the driver: the exact bigint sums and
+    # Spark's own b/a doubles, which every score reads as literals --
+    # the same doubles, so the same scores, with no broadcast of the
+    # fit into each fold and no re-run of its train-fold aggregation.
+    fit_row = (
+        fit.select("*", F.expr(_CFP_B).alias("b"))
+        .select("*", F.expr(_CFP_A).alias("a"))
+        .first()
     )
+    fitted = [
+        F.lit(fit_row.a).cast("double").alias("a"),
+        F.lit(fit_row.b).cast("double").alias("b"),
+    ]
+
+    def scores(fold: int) -> DataFrame:
+        return (
+            v.filter(F.col("fold") == fold)
+            .select("x", "y", *fitted)
+            .select(F.expr(_CFP_SCORE).alias("c"))
+        )
+
+    cal = scores(8).localCheckpoint(eager=True)
     # min/max ride the calibration-count aggregation the query already
     # pays and are handed to the selector as its bounds.
     caln = cal.agg(
@@ -496,22 +504,17 @@ def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
             " n_test bigint, n_covered bigint, coverage_pct double",
         )
     q_hat = F.lit(sel["q"]).cast("bigint")
-    test = (
-        v.filter(F.col("fold") == 9)
-        .crossJoin(ab2)
-        .select(F.expr(_CFP_SCORE).alias("s"))
-    )
     # grouped on the literal so an empty test fold still yields no row
-    cov = test.groupBy(q_hat.alias("q_hat_cents")).agg(
-        F.count("*").cast("bigint").alias("n_test"),
-        F.sum(F.when(F.col("s") <= q_hat, 1).otherwise(0))
-        .cast("bigint").alias("n_covered"),
-    )
     return (
-        fit_row.select(F.col("n").alias("n_train"))
-        .crossJoin(F.broadcast(cov))
+        scores(9)
+        .groupBy(q_hat.alias("q_hat_cents"))
+        .agg(
+            F.count("*").cast("bigint").alias("n_test"),
+            F.sum(F.when(F.col("c") <= q_hat, 1).otherwise(0))
+            .cast("bigint").alias("n_covered"),
+        )
         .select(
-            "n_train",
+            F.lit(fit_row.n).cast("bigint").alias("n_train"),
             F.lit(caln.n_cal).cast("bigint").alias("n_cal"),
             F.lit(caln.target_rank).cast("bigint").alias("target_rank"),
             "q_hat_cents",
@@ -593,10 +596,9 @@ def embedding_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor_id) so both engines order identically.  At 100 TB the
     same plan evaluates over a hash-sampled query set; the scan side
     stays the one full pass any exact-recall evaluation needs."""
-    v = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("e"),
-    )
+    from .similarity import _vectors
+
+    v = _vectors(spark, sf_dir)
     q = v.filter(F.col("vec_id") < _MRL_NQ).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
     )

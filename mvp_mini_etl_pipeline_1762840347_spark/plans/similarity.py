@@ -5,6 +5,23 @@ sign-bucket LSH variant as the scale path.  All vector math is
 higher-order functions (`zip_with`/`aggregate`) -- JVM-side, no
 Python UDF, no collect.
 
+The cosine kernel
+-----------------
+Spark's higher-order functions are interpreted (`CodegenFallback`):
+every fold walks its array element by element outside whole-stage
+codegen, so a vector query's task time is its fold count.  One
+kernel keeps that count at the minimum the answer needs:
+
+* per VECTOR, one self-dot ``s = e . e``: `_vectors` computes it where
+  the vector is read, and `_rank_cells` where a centroid is built
+  (``cs``);
+* per scored PAIR, one dot: ``cosine(a, b, sa, sb) = (a . b) /
+  sqrt(sa * sb)`` -- the same expression tree as the three-fold
+  ``(a . b) / sqrt((a . a) * (b . b))``, so the doubles are the same;
+* per ROW of a centroid ranking, one dot per centroid, evaluated once:
+  `_rank_cells`'s ``cluster`` key is non-null, so no inferred
+  ``isnotnull`` copy of the ranking lands in the join condition.
+
 Scale notes
 -----------
 * Brute force is O(Q x N): fine for small query sets (the query side
@@ -33,20 +50,116 @@ TOP_K = 10
 BUCKET_BITS = 8
 
 
-def _as_double(c: Column) -> Column:
-    return F.transform(c, lambda x: x.cast("double"))
-
-
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """cos(a,b) = dot/(sqrt(dot(a,a)*dot(b,b))) in double precision --
-    formula written identically in the oracle for bit-level agreement."""
-    return _dot(a, b) / F.sqrt(_dot(a, a) * _dot(b, b))
+def _sq_dist(a: Column, b: Column) -> Column:
+    """Squared L2 distance ``sum((a_i - b_i)^2)``, one fold."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, t: acc + t,
+    )
+
+
+def _vectors(spark: SparkSession, sf_dir: str, *extra: str) -> DataFrame:
+    """The `embeddings` table as ``vec_id, *extra, e, s``: ``e`` the
+    vector as doubles, ``s`` its self-dot ``e . e``, computed once per
+    vector so every cosine against the row reuses it.  Columns a query
+    never reads (``s`` included) are pruned from its plan."""
+    v = read_table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        *extra,
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("e"),
+    )
+    return v.select("*", _dot(F.col("e"), F.col("e")).alias("s"))
+
+
+def cosine(a: Column, b: Column, sa: Column, sb: Column) -> Column:
+    """cos(a,b) = dot(a,b)/sqrt(sa*sb), with ``sa``/``sb`` the vectors'
+    un-rooted self-dots (`_vectors`' ``s``, a centroid's ``cs``): ONE
+    fold per pair.  The expression tree is the oracle's
+    ``dot(a,b)/sqrt(dot(a,a)*dot(b,b))`` with the self-dots read, not
+    recomputed, so the doubles agree bit for bit (sqrt(sa)*sqrt(sb)
+    would differ from sqrt(sa*sb) in the last ulps)."""
+    return _dot(a, b) / F.sqrt(sa * sb)
+
+
+def _rank_cells(
+    vectors: DataFrame, centroids: DataFrame, n: int = 1
+) -> DataFrame:
+    """Rank the ``centroids`` (``cid, ce``) for every row of
+    ``vectors`` (``e, s`` plus any columns, all kept) by (rounded
+    cosine desc, cid asc): the centroids collapse to ONE broadcast
+    array row, each carrying its self-dot ``cs``, and each vector
+    ranks them locally -- a narrow map, zero shuffle.  Adds
+    ``cluster`` (the nearest cid) and ``cells`` (the ``n`` nearest
+    cids, nearest first).
+
+    ``cluster`` is null only when there is no centroid at all, and
+    then no probe exists to match it; coalescing it to -1 tells Spark
+    the key is non-null, so a later equi-join on it infers no
+    ``isnotnull(cluster)`` -- a filter the optimizer would push through
+    the projection into the broadcast join's condition, evaluating the
+    whole ranking a second time per row.  Explode ``cells`` with
+    ``explode_outer``/``posexplode_outer`` for the same reason: an
+    inner explode infers ``size(cells) > 0`` and pushes it down the
+    same way (an empty ``cells`` yields a null cell, which matches
+    nothing)."""
+    cells = centroids.select(
+        F.struct("cid", "ce", _dot(F.col("ce"), F.col("ce")).alias("cs")).alias("c")
+    ).agg(F.array_sort(F.collect_list("c")).alias("cents"))
+    ranked = F.array_sort(
+        F.transform(
+            F.col("cents"),
+            lambda c: F.struct(
+                (-F.round(cosine(F.col("e"), c["ce"], F.col("s"), c["cs"]), 4))
+                .alias("neg_sim"),
+                c["cid"].alias("cid"),
+            ),
+        )
+    )
+    keep = vectors.columns
+    return (
+        vectors.join(F.broadcast(cells))
+        .select(*keep, ranked.alias("ranked"))
+        .select(
+            *keep,
+            F.coalesce(F.element_at("ranked", 1)["cid"], F.lit(-1)).alias("cluster"),
+            F.transform(F.slice("ranked", 1, n), lambda c: c["cid"]).alias("cells"),
+        )
+    )
+
+
+def _query_sim() -> Column:
+    """``sim``: the rounded cosine of a query vector (``qe``, ``qs``)
+    and a corpus vector (``e``, ``s``), the score every top-k ranks by."""
+    return F.round(
+        cosine(F.col("qe"), F.col("e"), F.col("qs"), F.col("s")), 4
+    ).alias("sim")
+
+
+def _top(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best ``neighbor_id`` per ``query_id`` by (``sim`` desc,
+    ``neighbor_id``), with their ``rank``: a unique order key, so both
+    engines keep the same rows."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("neighbor_id")
+    )
+    return scored.select("*", F.row_number().over(w).alias("rank")).filter(
+        F.col("rank") <= k
+    )
+
+
+def _bucket() -> Column:
+    """The 8-bit hyperplane-sign LSH key of ``e``."""
+    return sum(
+        F.when(F.element_at("e", i + 1) > 0, F.lit(1 << i)).otherwise(0)
+        for i in range(BUCKET_BITS)
+    )
 
 
 _COS_SQL = (
@@ -80,26 +193,17 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-10 cosine neighbors for the first 5 vectors.  The tiny
     query side is broadcast; ranking is over (rounded sim, neighbor_id)
     so results are deterministic across engines."""
-    v = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("e")
-    )
+    v = _vectors(spark, sf_dir)
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
+        F.col("vec_id").alias("query_id"),
+        F.col("e").alias("qe"),
+        F.col("s").alias("qs"),
     )
     scored = (
         v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("qe"), F.col("e")), 4).alias("sim"),
-        )
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), _query_sim())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return scored.select(
-        "*", F.row_number().over(w).alias("rank")
-    ).filter(F.col("rank") <= TOP_K)
+    return _top(scored, TOP_K)
 
 
 # ---------------------------------------------------------------------------
@@ -139,17 +243,12 @@ def similarity_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     of its first 8 dims (hyperplane-sign LSH), score only within the
     query's bucket, keep top-5.  Candidate generation is an equi-join
     on the bucket key -- N/256 of the corpus per query instead of N."""
-    v = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("e")
-    )
-    bucket = sum(
-        F.when(F.element_at("e", i + 1) > 0, F.lit(1 << i)).otherwise(0)
-        for i in range(BUCKET_BITS)
-    )
-    b = v.withColumn("bucket", bucket)
+    v = _vectors(spark, sf_dir)
+    b = v.withColumn("bucket", _bucket())
     q = b.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qe"),
+        F.col("s").alias("qs"),
         F.col("bucket").alias("qbucket"),
     )
     scored = (
@@ -158,18 +257,9 @@ def similarity_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("bucket") == F.col("qbucket"))
             & (F.col("vec_id") != F.col("query_id")),
         )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("qe"), F.col("e")), 4).alias("sim"),
-        )
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), _query_sim())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return scored.select(
-        "*", F.row_number().over(w).alias("rank")
-    ).filter(F.col("rank") <= 5)
+    return _top(scored, 5)
 
 
 # ---------------------------------------------------------------------------
@@ -224,44 +314,23 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids come from a k-means sample and the plan is unchanged.
 
     Scale shape: centroids are collected into ONE array broadcast to
-    every row, and assignment is a higher-order-function argmax -- a
-    narrow map over the corpus, zero shuffle (vs. the naive
-    crossJoin + window which shuffles N x K rows).  Candidate
-    generation is then an equi-join on the cell id, broadcast on the
-    tiny probe side: the corpus shuffles once, on cluster."""
-    v = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("e")
+    every row, and assignment is `_rank_cells`' higher-order-function
+    argmax -- a narrow map over the corpus, zero shuffle (vs. the
+    naive crossJoin + window which shuffles N x K rows), one fold per
+    centroid per vector.  Candidate generation is then an equi-join on
+    the cell id, broadcast on the tiny probe side: the corpus shuffles
+    once, on cluster."""
+    v = _vectors(spark, sf_dir)
+    cents = v.filter(F.col("vec_id") < N_CENTROIDS).select(
+        F.col("vec_id").alias("cid"), F.col("e").alias("ce")
     )
-    cents = (
-        v.filter(F.col("vec_id") < N_CENTROIDS)
-        .select(F.struct(F.col("vec_id").alias("cid"), F.col("e").alias("ce")).alias("c"))
-        .agg(F.array_sort(F.collect_list("c")).alias("cents"))
-    )
-    # Per-row (csim desc, cid asc)-sorted centroid ranking, computed
-    # JVM-side: struct sort on (-sim, cid).
-    ranked = F.array_sort(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                (-F.round(cosine(F.col("e"), c["ce"]), 4)).alias("neg_sim"),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )
-    va = (
-        v.join(F.broadcast(cents))
-        .select("vec_id", "e", ranked.alias("ranked"))
-        .select("vec_id", "e", F.element_at("ranked", 1)["cid"].alias("cluster"),
-                F.slice("ranked", 1, N_PROBE).alias("probe_cells"))
-    )
-    assign = va.select("vec_id", "e", "cluster")
-    probes = (
-        va.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.explode(F.transform("probe_cells", lambda p: p["cid"])).alias("pcell"),
-        )
+    va = _rank_cells(v, cents, N_PROBE)
+    assign = va.select("vec_id", "e", "s", "cluster")
+    probes = va.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("e").alias("qe"),
+        F.col("s").alias("qs"),
+        F.explode_outer("cells").alias("pcell"),
     )
     scored = (
         assign.join(
@@ -269,18 +338,9 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("cluster") == F.col("pcell"))
             & (F.col("vec_id") != F.col("query_id")),
         )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("qe"), F.col("e")), 4).alias("sim"),
-        )
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), _query_sim())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return scored.select(
-        "*", F.row_number().over(w).alias("rank")
-    ).filter(F.col("rank") <= 5)
+    return _top(scored, 5)
 
 
 # ---------------------------------------------------------------------------
@@ -303,16 +363,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket with cosine >= 0.35.  The bucket equi-join keeps the
     pairwise work at ~N^2/256 instead of N^2; the threshold filter is
     pushed into the join's projection."""
-    v = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("e")
-    )
-    bucket = sum(
-        F.when(F.element_at("e", i + 1) > 0, F.lit(1 << i)).otherwise(0)
-        for i in range(BUCKET_BITS)
-    )
-    b = v.withColumn("bucket", bucket)
+    v = _vectors(spark, sf_dir, "label")
+    b = v.withColumn("bucket", _bucket())
     a, c = b.alias("a"), b.alias("c")
-    sim = cosine(F.col("a.e"), F.col("c.e"))
+    sim = cosine(F.col("a.e"), F.col("c.e"), F.col("a.s"), F.col("c.s"))
     return (
         a.join(
             c,
@@ -374,16 +428,12 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (each a map-side-combinable sum / bounded distinct), so adding a
     threshold costs one column, not one pipeline run.  The fan-out to
     output rows multiplies a single aggregate row."""
-    v = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("e")
-    )
-    bucket = sum(
-        F.when(F.element_at("e", i + 1) > 0, F.lit(1 << i)).otherwise(0)
-        for i in range(BUCKET_BITS)
-    )
-    b = v.withColumn("bucket", bucket)
+    v = _vectors(spark, sf_dir)
+    b = v.withColumn("bucket", _bucket())
     a, c = b.alias("a"), b.alias("c")
-    sim = F.round(cosine(F.col("a.e"), F.col("c.e")), 4)
+    sim = F.round(
+        cosine(F.col("a.e"), F.col("c.e"), F.col("a.s"), F.col("c.s")), 4
+    )
     pairs = a.join(
         c,
         (F.col("a.bucket") == F.col("c.bucket"))
@@ -445,12 +495,9 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label L2-norm statistics -- the standard pre-ANN sanity
     check (catches zero/unnormalized vectors before they poison cosine
     scores)."""
-    v = read_table(spark, sf_dir, "embeddings").select(
-        "label", _as_double(F.col("embedding")).alias("e")
-    )
-    nrm = F.sqrt(_dot(F.col("e"), F.col("e")))
+    v = _vectors(spark, sf_dir, "label")
     return (
-        v.select("label", nrm.alias("nrm"))
+        v.select("label", F.sqrt("s").alias("nrm"))
         .groupBy("label")
         .agg(
             F.count("*").alias("n_vectors"),
@@ -482,9 +529,7 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole vectors, and it is exactly the reduce step of a distributed
     k-means iteration (plans/similarity.py::similarity_ivf consumes
     such centroids)."""
-    v = read_table(spark, sf_dir, "embeddings").select(
-        "label", _as_double(F.col("embedding")).alias("e")
-    )
+    v = _vectors(spark, sf_dir, "label")
     exploded = v.select("label", F.posexplode("e").alias("pos0", "val"))
     return (
         exploded.groupBy("label", (F.col("pos0") + 1).alias("pos"))
@@ -519,12 +564,6 @@ _RECOMPUTE_SQL = """
 """
 
 
-def _km_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("e")
-    )
-
-
 def _km_seed(vectors: DataFrame) -> DataFrame:
     """Deterministic seeds: the first K vectors by key."""
     return vectors.filter(F.col("vec_id") < _KM_K).select(
@@ -532,30 +571,14 @@ def _km_seed(vectors: DataFrame) -> DataFrame:
     )
 
 
-def _km_assign(
-    vectors: DataFrame, centroids: DataFrame, extra: tuple[str, ...] = ()
-) -> DataFrame:
-    """Nearest-centroid assignment as a broadcast-array argmax: the K
-    centroids collapse to one array row, broadcast against the corpus,
-    and each vector ranks them locally -- a narrow map, zero shuffle.
+def _km_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
+    """Nearest-centroid assignment: `_rank_cells`' broadcast-array
+    argmax (one fold per centroid per vector, the vector's self-dot
+    read from ``s``), keeping every column of ``vectors`` -- the
+    convergence loop carries the previous assignment this way.
     Similarities round to 4 with cid tiebreak so both engines pick
-    identical winners.  ``extra`` columns of ``vectors`` ride along
-    (the convergence loop carries the previous assignment this way)."""
-    cents = centroids.select(
-        F.struct(F.col("cid"), F.col("ce")).alias("c")
-    ).agg(F.array_sort(F.collect_list("c")).alias("cents"))
-    ranked = F.array_sort(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                (-F.round(cosine(F.col("e"), c["ce"]), 4)).alias("neg_sim"),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )
-    return vectors.join(F.broadcast(cents)).select(
-        "vec_id", "e", *extra, F.element_at(ranked, 1)["cid"].alias("cluster")
-    )
+    identical winners."""
+    return _rank_cells(vectors, centroids).drop("cells")
 
 
 def _km_recompute(assigned: DataFrame) -> DataFrame:
@@ -611,7 +634,7 @@ def kmeans_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     with cid tiebreak, recomputed centroid components round to 6 so
     both engines iterate on identical doubles.  The DuckDB oracle
     unrolls the same two iterations in SQL."""
-    v = _km_vectors(spark, sf_dir)
+    v = _vectors(spark, sf_dir)
     a1 = _km_assign(v, _km_seed(v))
     cent1 = _km_recompute(a1)
     a2 = _km_assign(v, cent1)
@@ -667,7 +690,7 @@ def kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly ONE job (previously checkpoint + a separate count).  At
     100 TB the probe is free by construction: it is computed inline
     while the round's partitions stream through the checkpoint."""
-    v = _km_vectors(spark, sf_dir).localCheckpoint()
+    v = _vectors(spark, sf_dir).localCheckpoint()
     assigned = _km_assign(v, _km_seed(v)).localCheckpoint()
     for _ in range(1, _KM_MAX_ITERS):
         # Re-assign with the previous cluster riding along so the
@@ -676,7 +699,7 @@ def kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev = assigned.withColumnRenamed("cluster", "prev")
         probe = Observation()
         nxt = (
-            _km_assign(prev, _km_recompute(assigned), extra=("prev",))
+            _km_assign(prev, _km_recompute(assigned))
             .observe(
                 probe,
                 F.count(
@@ -720,17 +743,15 @@ def kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def embedding_centered_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Within-label dispersion: each vector minus its label centroid
-    (element-wise zip_with subtraction between the row's array and the
-    joined centroid array), L2 norm of the residual, aggregated per
-    label -- the spread statistic behind cluster-quality checks and
-    whitening.  Centroids are tiny (LABELS x DIM) and broadcast; the
-    subtraction is a narrow map; unrounded centroid doubles agree
+    """Within-label dispersion: the L2 norm of each vector minus its
+    label centroid (one squared-difference fold between the row's
+    array and the joined centroid array), aggregated per label -- the
+    spread statistic behind cluster-quality checks and whitening.
+    Centroids are tiny (LABELS x DIM) and broadcast; the fold is a
+    narrow map; unrounded centroid doubles agree
     across engines because avg() over the same values is
     deterministic per (label, dim) group."""
-    v = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("e")
-    )
+    v = _vectors(spark, sf_dir, "label")
     per_dim = (
         v.select("label", F.posexplode("e").alias("pos", "val"))
         .groupBy("label", "pos")
@@ -742,8 +763,7 @@ def embedding_centered_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda s: s["cv"],
         ).alias("c")
     )
-    d = F.zip_with(F.col("e"), F.col("c"), lambda x, y: x - y)
-    resid_norm = F.sqrt(_dot(d, d))
+    resid_norm = F.sqrt(_sq_dist(F.col("e"), F.col("c")))
     return (
         v.join(F.broadcast(cents), "label")
         .select("label", resid_norm.alias("rn"))
@@ -801,9 +821,7 @@ def embedding_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     never change.  The projection stays a NARROW map: no shuffle, no
     broadcast state, embarrassingly parallel at any corpus size.  The
     oracle recomputes the identical fold in DuckDB's list algebra."""
-    v = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("e")
-    )
+    v = _vectors(spark, sf_dir)
 
     import hashlib
 
@@ -832,10 +850,12 @@ def embedding_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sequence(F.lit(0), F.lit(_JL_OUT - 1)), lambda j: _proj(j)
     )
     v = v.withColumn("signs", signs_col)
-    norm_in = F.sqrt(_dot(F.col("e"), F.col("e")))
-    norm_out = F.sqrt(_dot(F.col("p"), F.col("p")))
+    norm_in = F.sqrt(F.col("s"))
+    norm_out = F.sqrt(
+        F.aggregate(F.col("p"), F.lit(0.0), lambda acc, x: acc + x * x)
+    )
     return (
-        v.select("vec_id", "e", proj.alias("p"))
+        v.select("vec_id", "s", proj.alias("p"))
         .select(
             "vec_id",
             F.round(norm_in, 4).alias("norm_in"),
@@ -911,9 +931,7 @@ def pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute shuffles (subspace, code, dim) partial means, never
     whole vectors -- kmeans_2iter's discipline, applied per subspace
     in the SAME job."""
-    v = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("e")
-    )
+    v = _vectors(spark, sf_dir)
     sub = v.select(
         "vec_id",
         F.explode(F.sequence(F.lit(0), F.lit(_PQ_SUBS - 1))).alias("s"),
@@ -929,20 +947,13 @@ def pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s").alias("c_s"), F.col("vec_id").alias("code"), F.col("x").alias("c")
     )
 
-    def _l2(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-
     assigned = (
         sub.join(F.broadcast(seeds), sub.s == seeds.c_s)
         .groupBy("vec_id", "s", "x")
         .agg(
             F.min_by(
                 "code",
-                F.round(_l2(F.col("x"), F.col("c")) * 10000, 0).cast("bigint")
+                F.round(_sq_dist(F.col("x"), F.col("c")) * 10000, 0).cast("bigint")
                 * 1000
                 + F.col("code"),
             ).alias("code")
@@ -1043,9 +1054,7 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly how a 100 TB corpus gets compressed before ANN serving
     (the oracle re-derives the training chain + encode in DuckDB's
     list algebra)."""
-    v = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("e")
-    )
+    v = _vectors(spark, sf_dir)
     sub = v.select(
         "vec_id",
         F.explode(F.sequence(F.lit(0), F.lit(_PQ_SUBS - 1))).alias("s"),
@@ -1061,13 +1070,6 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("x").alias("c"),
     )
 
-    def _l2(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-
     def _key(dist: Column, code: Column) -> Column:
         return F.round(dist * 10000, 0).cast("bigint") * 1000 + code
 
@@ -1075,9 +1077,9 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         sub.join(F.broadcast(seeds), sub.s == seeds.c_s)
         .groupBy("vec_id", "s", "x")
         .agg(
-            F.min_by("code", _key(_l2(F.col("x"), F.col("c")), F.col("code"))).alias(
-                "code"
-            )
+            F.min_by(
+                "code", _key(_sq_dist(F.col("x"), F.col("c")), F.col("code"))
+            ).alias("code")
         )
     )
     cb = (
@@ -1093,7 +1095,7 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("c")
         )
     )
-    dist = _l2(F.col("x"), F.col("c"))
+    dist = _sq_dist(F.col("x"), F.col("c"))
     enc = (
         sub.join(F.broadcast(cb), sub.s == cb.c_s)
         .groupBy("vec_id", "s")
@@ -1168,50 +1170,30 @@ def similarity_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan; the LSH arm touches ~N/2^{bits} of the corpus per query via
     the bucket equi-join; the set intersection is a join on
     (query_id, neighbor_id) over 2 x {nq}x{k} rows."""
-    v = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("e")
-    )
-    bucket = sum(
-        F.when(F.element_at("e", i + 1) > 0, F.lit(1 << i)).otherwise(0)
-        for i in range(BUCKET_BITS)
-    )
-    b = v.withColumn("bucket", bucket)
+    v = _vectors(spark, sf_dir)
+    b = v.withColumn("bucket", _bucket())
     q = b.filter(F.col("vec_id") < _RECALL_NQ).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qe"),
+        F.col("s").alias("qs"),
         F.col("bucket").alias("qbucket"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    ex = (
-        v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("qe"), F.col("e")), 4).alias("sim"),
-        )
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _RECALL_K)
-        .select("query_id", "neighbor_id")
-    )
-    ap = (
+    ex = _top(
+        v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
+            "query_id", F.col("vec_id").alias("neighbor_id"), _query_sim()
+        ),
+        _RECALL_K,
+    ).select("query_id", "neighbor_id")
+    ap = _top(
         b.join(
             F.broadcast(q),
             (F.col("bucket") == F.col("qbucket"))
             & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("qe"), F.col("e")), 4).alias("sim"),
-        )
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _RECALL_K)
-        .select(
-            F.col("query_id").alias("a_query_id"),
-            F.col("neighbor_id").alias("a_neighbor_id"),
-        )
+        ).select("query_id", F.col("vec_id").alias("neighbor_id"), _query_sim()),
+        _RECALL_K,
+    ).select(
+        F.col("query_id").alias("a_query_id"),
+        F.col("neighbor_id").alias("a_neighbor_id"),
     )
     return (
         ex.join(
@@ -1333,9 +1315,7 @@ def pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact re-rank touches NQ x {k} raw vectors, not the corpus.  At
     100 TB the full-precision embeddings stay cold on disk -- ADC
     reads ~{subs} bytes/vector, which is why PQ serving scales."""
-    v = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("e")
-    )
+    v = _vectors(spark, sf_dir)
     sub = v.select(
         "vec_id",
         F.explode(F.sequence(F.lit(0), F.lit(_PQ_SUBS - 1))).alias("s"),
@@ -1351,13 +1331,6 @@ def pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("x").alias("c"),
     )
 
-    def _l2(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-
     def _key(dist: Column, code: Column) -> Column:
         return F.round(dist * 10000, 0).cast("bigint") * 1000 + code
 
@@ -1365,9 +1338,9 @@ def pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         sub.join(F.broadcast(seeds), sub.s == seeds.c_s)
         .groupBy("vec_id", "s", "x")
         .agg(
-            F.min_by("code", _key(_l2(F.col("x"), F.col("c")), F.col("code"))).alias(
-                "code"
-            )
+            F.min_by(
+                "code", _key(_sq_dist(F.col("x"), F.col("c")), F.col("code"))
+            ).alias("code")
         )
     )
     cb = (
@@ -1394,7 +1367,7 @@ def pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id", "s")
         .agg(
             F.min_by(
-                "code", _key(_l2(F.col("x"), F.col("c")), F.col("code"))
+                "code", _key(_sq_dist(F.col("x"), F.col("c")), F.col("code"))
             ).alias("code")
         )
     )
@@ -1405,7 +1378,7 @@ def pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("q_id"),
             F.col("s").alias("l_s"),
             F.col("code").alias("l_code"),
-            F.round(_l2(F.col("x"), F.col("c")), 6).alias("sq"),
+            F.round(_sq_dist(F.col("x"), F.col("c")), 6).alias("sq"),
         )
     )
     approx = (
@@ -1439,7 +1412,7 @@ def pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank",
             "vec_id",
             F.round("adc", 4).alias("adc_sq_dist"),
-            F.round(_l2(F.col("qe"), F.col("e")), 4).alias("exact_sq_dist"),
+            F.round(_sq_dist(F.col("qe"), F.col("e")), 4).alias("exact_sq_dist"),
         )
     )
 
@@ -2214,22 +2187,18 @@ def similarity_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the corpus never shuffles.  Compare similarity_lsh_bucket
     (single probe) and similarity_recall (the measured
     recall-vs-exact harness)."""
-    v = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("e")
-    )
-    bucket = sum(
-        F.when(F.element_at("e", i + 1) > 0, F.lit(1 << i)).otherwise(0)
-        for i in range(BUCKET_BITS)
-    )
-    b = v.withColumn("bucket", bucket)
+    v = _vectors(spark, sf_dir)
+    b = v.withColumn("bucket", _bucket())
     q = b.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qe"),
+        F.col("s").alias("qs"),
         F.col("bucket").alias("qbucket"),
     )
     probes = q.select(
         "query_id",
         "qe",
+        "qs",
         F.explode(
             F.array(
                 F.col("qbucket"),
@@ -2246,18 +2215,9 @@ def similarity_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("bucket") == F.col("pbucket"))
             & (F.col("vec_id") != F.col("query_id")),
         )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("qe"), F.col("e")), 4).alias("sim"),
-        )
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), _query_sim())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return scored.select(
-        "*", F.row_number().over(w).alias("rank")
-    ).filter(F.col("rank") <= 5)
+    return _top(scored, 5)
 
 
 similarity_lsh_multiprobe.__doc__ = similarity_lsh_multiprobe.__doc__.format(
@@ -2493,83 +2453,39 @@ def ann_recall_vs_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows) by |probe budgets| -- never the corpus; and the exact arm
     brute-forces only the broadcast query sample.  Windows partition
     by (budget, query): bounded frames."""
-    v = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("e")
+    v = _vectors(spark, sf_dir)
+    cents = v.filter(F.col("vec_id") < N_CENTROIDS).select(
+        F.col("vec_id").alias("cid"), F.col("e").alias("ce")
     )
-    cents = (
-        v.filter(F.col("vec_id") < N_CENTROIDS)
-        .select(
-            F.struct(
-                F.col("vec_id").alias("cid"), F.col("e").alias("ce")
-            ).alias("c")
-        )
-        .agg(F.array_sort(F.collect_list("c")).alias("cents"))
+    va = _rank_cells(v, cents, max(_SWEEP_PROBES))
+    assign = va.select("vec_id", "e", "s", "cluster")
+    probes = va.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("e").alias("qe"),
+        F.col("s").alias("qs"),
+        F.posexplode_outer("cells").alias("pos", "qcluster"),
     )
-    ranked = F.array_sort(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                (-F.round(cosine(F.col("e"), c["ce"]), 4)).alias("neg_sim"),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )
-    va = (
-        v.join(F.broadcast(cents))
-        .select("vec_id", "e", ranked.alias("ranked"))
-        .select(
-            "vec_id",
-            "e",
-            F.element_at("ranked", 1)["cid"].alias("cluster"),
-            F.slice("ranked", 1, max(_SWEEP_PROBES)).alias("probe_cells"),
-        )
-    )
-    assign = va.select("vec_id", "e", "cluster")
-    probes = (
-        va.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.posexplode("probe_cells").alias("pos", "cell"),
-        )
-        .select(
-            "query_id",
-            "qe",
-            (F.col("pos") + 1).alias("probe_rank"),
-            F.col("cell")["cid"].alias("cluster"),
-        )
-    )
-    probes = probes.withColumnRenamed("cluster", "qcluster")
-    cand = (
-        assign.join(
-            F.broadcast(probes),
-            (F.col("cluster") == F.col("qcluster"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            "probe_rank",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("qe"), F.col("e")), 4).alias("sim"),
-        )
+    cand = assign.join(
+        F.broadcast(probes),
+        (F.col("cluster") == F.col("qcluster"))
+        & (F.col("vec_id") != F.col("query_id")),
+    ).select(
+        "query_id",
+        (F.col("pos") + 1).alias("probe_rank"),
+        F.col("vec_id").alias("neighbor_id"),
+        _query_sim(),
     )
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
+        F.col("vec_id").alias("query_id"),
+        F.col("e").alias("qe"),
+        F.col("s").alias("qs"),
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    exact = (
-        v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("qe"), F.col("e")), 4).alias("sim"),
-        )
-        .select("*", F.row_number().over(wq).alias("rank"))
-        .filter(F.col("rank") <= _SWEEP_K)
-        .select("query_id", F.col("neighbor_id").alias("e_neighbor"))
-    )
+    exact = _top(
+        v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
+            "query_id", F.col("vec_id").alias("neighbor_id"), _query_sim()
+        ),
+        _SWEEP_K,
+    ).select("query_id", F.col("neighbor_id").alias("e_neighbor"))
     budgets = F.explode(
         F.array(*[F.lit(p) for p in _SWEEP_PROBES])
     ).alias("p")

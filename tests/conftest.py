@@ -27,7 +27,14 @@ def sf_dir():
 def count_jobs(spark):
     """``count_jobs(call)`` -> (``call()``'s result, the number of Spark
     jobs it launched), counted from ``statusTracker`` under a fresh job
-    group once the listener bus has delivered every job event."""
+    group once the listener bus has delivered every job event.
+
+    The group isolates a call only from work that runs outside it.  A
+    group set inside one member of ``plans/fragments.py::fan_out`` does
+    not isolate that member from its concurrently running siblings:
+    their broadcast jobs can land in it (seen on a ``local[8]``
+    session), so count a fan-out member's jobs by running the members
+    one after another."""
     import itertools
 
     sc = spark.sparkContext

@@ -373,6 +373,22 @@ def test_token_weighted_median_len_warm_call_job_budget(spark, count_jobs):
     assert 0 < jobs <= 8
 
 
+def test_conformal_interval_warm_call_job_budget(spark, count_jobs):
+    """The one-row OLS fit is read into Python and its b/a doubles reach
+    the fold scores as literals: a warm call is the fit, the
+    calibration checkpoint, its stats, the histogram rounds and the
+    write -- at most 13 jobs, where broadcasting the checkpointed fit
+    into both folds and the final cross join ran 16."""
+    run = entrymod.queries()["conformal_interval"]
+
+    def call():
+        run(spark, SF).write.format("noop").mode("overwrite").save()
+
+    call()
+    _, jobs = count_jobs(call)
+    assert 0 < jobs <= 13
+
+
 _SELECTION_QUERIES = {
     "token_weighted_median_len": [
         ("total_tokens", "bigint"), ("target_w", "bigint"),
