@@ -48,10 +48,9 @@ def _tokens(docs: DataFrame) -> DataFrame:
 def word3_shingles(toks) -> "F.Column":
     """THE word-3-gram shingle array over a token-array column -- the
     single shingle definition every builder composes (`_shingles`,
-    `_shingle_array`, `corpus_doc_shingles`, quality's `_doc_shingles`
-    and shingle stores), so the cache-on == cache-off parity argument
-    for store-derived reroutes is STRUCTURAL, not four copies kept
-    byte-identical by convention (ADVICE r11).
+    `_shingle_array`, `doc_shingles` and the stores built from it), so
+    the corpus store and the streaming twins' text scans agree by
+    construction, not by copies kept byte-identical by convention.
 
     The caller must materialize the token array in its own projection
     first: inlining the split() into the lambda makes Catalyst
@@ -84,63 +83,72 @@ def _shingles(docs: DataFrame, distinct: bool = True) -> DataFrame:
     return out.distinct() if distinct else out
 
 
-def corpus_doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, source, sh: array<string>) -- every corpus document's
-    DISTINCT word-3-gram shingles as a per-row array, the doc-keyed
-    shingle STORE as a batch-window fragment (the same shape
-    _curation_state commits as its ``doc_sh`` table).
+def doc_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, source, sh: array<string>) -- each document's DISTINCT
+    word-3-gram shingles as a per-row array (documents under 3 tokens
+    have none and drop out).  size(sh) is the doc's distinct shingle
+    count, so stored arrays re-score contamination bit-identically.
+    The one per-document shingle-array builder: the corpus store
+    below and the daily batch pass (quality._incremental_day_frames)
+    both build with it."""
+    toks = F.col("toks")
+    return (
+        docs.select(
+            "doc_id",
+            "source",
+            F.split(F.lower(F.col("text")), r"\s+").alias("toks"),
+        )
+        .filter(F.size(toks) >= 3)
+        .select(
+            "doc_id",
+            "source",
+            F.array_distinct(word3_shingles(toks)).alias("sh"),
+        )
+    )
 
-    SIX registered queries re-derived this from text per run in the
-    same batch window (the containment/verify/recall/prefix-filter
-    joins, decontamination, the curation-state shingle stores), each
-    paying the regex split + 3-gram transform again; production keeps
-    the shingle store materialized next to the band store and every
-    consumer probes it.  Per-doc pure, so any per-doc membership
-    filter commutes with the shingling (the band-store rerouting
-    argument).  With the cache off (tests, PLAN_AUDIT) every
-    standalone plan is unchanged."""
+
+def corpus_doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``doc_shingles`` over the full corpus: the doc-keyed shingle
+    STORE as a batch-window fragment (the same shape _curation_state
+    commits as its ``doc_sh`` table).  It is the one shingle
+    derivation of the corpus: the containment/verify/recall/
+    prefix-filter joins, decontamination, the band signatures and the
+    curation-state shingle stores all probe it.  Per-doc pure, so any
+    per-doc membership filter commutes with the shingling.
+
+    The corpus is spread over the cores first: the single-file local
+    table otherwise pins the shingling to ONE task (production
+    multi-file inputs provide the parallelism natively and the
+    repartition coalesces to a no-op under AQE).  Whether the store is
+    materialized and kept is plans/fragments.py's decision alone."""
     from .fragments import cached_frame
 
-    def build() -> DataFrame:
-        d = _docs(spark, sf_dir).repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        toks = F.col("toks")
-        return (
-            d.select(
-                "doc_id",
-                "source",
-                F.split(F.lower(F.col("text")), r"\s+").alias("toks"),
+    return cached_frame(
+        spark,
+        ("doc_shingles", sf_dir),
+        lambda: doc_shingles(
+            _docs(spark, sf_dir).repartition(
+                spark.sparkContext.defaultParallelism
             )
-            .filter(F.size(toks) >= 3)
-            .select(
-                "doc_id",
-                "source",
-                F.array_distinct(word3_shingles(toks)).alias("sh"),
-            )
-        )
-
-    return cached_frame(spark, ("doc_shingles", sf_dir), build)
+        ),
+    )
 
 
-def _corpus_pair_shingles(
-    spark: SparkSession, sf_dir: str, spread: bool = False
-) -> DataFrame:
+def store_shingles(doc_sh: DataFrame, *cols: str) -> DataFrame:
+    """(*cols, shingle): one row per element of a doc-keyed shingle
+    store's arrays.  ``explode_outer``, which equals ``explode`` here
+    (every stored array holds at least one shingle): an inner explode
+    infers a ``size(sh) > 0`` filter that Spark pushes below a lazily
+    composed store onto the document scan, where it re-derives every
+    array with the regex split inlined per element reference."""
+    return doc_sh.select(*cols, F.explode_outer("sh").alias("shingle"))
+
+
+def _corpus_pair_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT (doc_id, shingle) pairs for the full corpus: the
-    materialized shingle-store fragment exploded when the batch-window
-    cache is on; the standalone text-scan plan (optionally spread over
-    the cores first -- the single-file-input parallelism fix some
-    callers need) when it is off."""
-    from .fragments import fragment_cache_on
-
-    if fragment_cache_on():
-        return corpus_doc_shingles(spark, sf_dir).select(
-            "doc_id", F.explode("sh").alias("shingle")
-        )
-    d = _docs(spark, sf_dir)
-    if spread:
-        d = d.repartition(spark.sparkContext.defaultParallelism)
-    return _shingles(d)
+    shingle-store fragment exploded (its arrays are per-doc distinct,
+    so no shuffle is needed to dedupe the pairs)."""
+    return store_shingles(corpus_doc_shingles(spark, sf_dir), "doc_id")
 
 
 def _shingle_array(docs: DataFrame) -> DataFrame:
@@ -258,37 +266,22 @@ def corpus_band_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     every full-table candidate generation (minhash_pairs and the ~9
     dedup/graph/split queries built on it).
 
-    Fragment-cached (plans/fragments.py): in a batch window the band
-    signatures are computed from text ONCE and every consumer probes
-    the materialized (doc_id, band, sig) store -- exactly the
-    production layout, where the store is a bucketed table maintained
-    by dedup_incremental.  With the cache off (the default; tests,
-    PLAN_AUDIT) this is the plain lazy plan.
+    Derived from the corpus shingle store, not from a second split of
+    the text: minhash minima are duplicate-insensitive, so the store's
+    DISTINCT arrays hash to the same signatures a text scan would, and
+    the store build is the corpus's one text scan.  Production keeps
+    this (doc_id, band, sig) store as a bucketed table maintained by
+    dedup_incremental; plans/fragments.py decides whether it is
+    materialized."""
+    from .fragments import cached_frame
 
-    The corpus is spread before the shingle+minhash partial
-    aggregation: the single-file local table otherwise pins that map
-    stage (the whole signature computation) to ONE task.  Production
-    multi-file inputs provide the parallelism natively and the
-    repartition coalesces to a no-op under AQE."""
-    from .fragments import cached_frame, fragment_cache_on
-
-    def build() -> DataFrame:
-        if fragment_cache_on():
-            # Derive the signatures from the materialized shingle
-            # store instead of re-splitting text: minhash minima are
-            # duplicate-insensitive, so the store's DISTINCT arrays
-            # hash to identical signatures, and the one remaining
-            # text scan of the window is the store build itself.
-            return _band_signatures_from_pairs(
-                _corpus_pair_shingles(spark, sf_dir)
-            )
-        return band_signatures(
-            _docs(spark, sf_dir).repartition(
-                spark.sparkContext.defaultParallelism
-            )
-        )
-
-    return cached_frame(spark, ("band_sigs", sf_dir), build)
+    return cached_frame(
+        spark,
+        ("band_sigs", sf_dir),
+        lambda: _band_signatures_from_pairs(
+            _corpus_pair_shingles(spark, sf_dir)
+        ),
+    )
 
 
 def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -341,9 +334,10 @@ def band_signatures(docs: DataFrame) -> DataFrame:
 
 def _band_signatures_from_pairs(sh: DataFrame) -> DataFrame:
     """band_signatures over an existing (doc_id, shingle) stream --
-    shared by the text-scan path above and the shingle-store fragment
-    path (minhash is duplicate-insensitive, so distinct or multiset
-    input yields identical signatures)."""
+    shared by the per-frame text scan above (streaming twins, snapshot
+    overrides) and the corpus shingle store (corpus_band_signatures;
+    minhash is duplicate-insensitive, so distinct or multiset input
+    yields identical signatures)."""
     # ONE md5 per shingle, staged in its own projection (inlining it
     # would re-evaluate the hash once per referencing minhash column).
     h = (
@@ -833,18 +827,10 @@ def decontaminate_eval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate -- no shuffle of the corpus beyond the per-doc groupBy,
     no pairwise stage anywhere.  At extreme eval sizes swap the
     broadcast for sketch_bloom_membership's bit-set (same join key,
-    probabilistic prefilter + exact residual check)."""
-    from .fragments import fragment_cache_on
-
-    if fragment_cache_on():
-        # batch-window path: probe the materialized shingle store
-        # (identical values; see decontaminate_from_store)
-        return decontaminate_from_store(corpus_doc_shingles(spark, sf_dir))
-    docs = _docs(spark, sf_dir)
-    return decontaminate_frame(
-        docs.filter(F.col("source") != _EVAL_SOURCE),
-        docs.filter(F.col("source") == _EVAL_SOURCE),
-    )
+    probabilistic prefilter + exact residual check).  The train and
+    eval sides both probe the corpus shingle store
+    (decontaminate_from_store), so the corpus is shingled once."""
+    return decontaminate_from_store(corpus_doc_shingles(spark, sf_dir))
 
 
 decontaminate_eval_overlap.__doc__ = decontaminate_eval_overlap.__doc__.format(
@@ -853,9 +839,12 @@ decontaminate_eval_overlap.__doc__ = decontaminate_eval_overlap.__doc__.format(
 
 
 def decontaminate_frame(train_docs: DataFrame, eval_docs: DataFrame) -> DataFrame:
-    """Frame-level decontamination core shared by the batch query above
-    and the streaming foreachBatch twin (streaming/jobs.py::
-    decontaminate_stream) -- ONE code path for backfill and live.
+    """Frame-level decontamination over two DOCUMENT frames: the core
+    of the streaming foreachBatch twin (streaming/jobs.py::
+    decontaminate_stream) and of the snapshot override of the
+    curation disposition frame.  The batch query probes the corpus
+    shingle store instead (decontaminate_from_store: same aggregate,
+    same values).
 
     Size + overlap fuse into ONE aggregate over a left join -- each
     side's shingle computation runs exactly once; a separate sizes/
@@ -878,20 +867,19 @@ def decontaminate_frame(train_docs: DataFrame, eval_docs: DataFrame) -> DataFram
 
 
 def decontaminate_from_store(doc_sh: DataFrame) -> DataFrame:
-    """decontaminate_frame over the materialized doc-keyed shingle
-    store (``corpus_doc_shingles`` / a committed ``doc_sh`` table,
+    """decontaminate_frame over a doc-keyed shingle store
+    (``corpus_doc_shingles`` / a committed ``doc_sh`` table,
     optionally membership-filtered): identical aggregate, zero text
     re-scans -- the store arrays are per-doc DISTINCT already, so the
     exploded stream matches decontaminate_frame's train side
     row-for-row and the per-doc counts are bit-identical."""
     eval_sh = (
-        doc_sh.filter(F.col("source") == _EVAL_SOURCE)
-        .select(F.explode("sh").alias("shingle"))
+        store_shingles(doc_sh.filter(F.col("source") == _EVAL_SOURCE))
         .distinct()
         .withColumn("hit", F.lit(1))
     )
-    train = doc_sh.filter(F.col("source") != _EVAL_SOURCE).select(
-        "doc_id", F.explode("sh").alias("shingle")
+    train = store_shingles(
+        doc_sh.filter(F.col("source") != _EVAL_SOURCE), "doc_id"
     )
     return _decon_agg(train, eval_sh)
 
@@ -1234,15 +1222,14 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates are both bucketed-join shaped; the final scorecard is
     three tiny counts."""
     # Three consumers (sizes + both sides of the shared-shingle self
-    # join) would each re-derive the regex-split/explode fan-out from
-    # the single-file scan; materialize the distinct shingle set once
-    # (from the shingle-store fragment in a batch window), with
+    # join) would each re-explode the shingle store; materialize the
+    # distinct (doc, shingle) set once, with
     # shingles hashed to 64-bit keys so the truth self-join shuffles
     # 8-byte longs, not strings (collision odds across the
     # distinct-shingle domain are ~|domain|^2/2^64; the oracle's
     # string-keyed truth re-checks equality on every run).
     sh = (
-        _corpus_pair_shingles(spark, sf_dir, spread=True)
+        _corpus_pair_shingles(spark, sf_dir)
         .select("doc_id", F.xxhash64("shingle").alias("shingle"))
         .localCheckpoint()
     )
@@ -1338,8 +1325,6 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_lsh_recall measures exactly that trade)."""
     from pyspark.sql.window import Window
 
-    # the single-file local corpus shingles on one task otherwise;
-    # production multi-file inputs provide this parallelism natively
     # shingle strings hash to 64-bit keys up front: every downstream
     # shuffle (df count, rank, candidate join, verify arrays) moves
     # 8-byte longs instead of ~25-byte strings.  The prefix theorem
@@ -1349,7 +1334,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (~|shingles|^2 / 2^64 -- and the oracle's string-keyed
     # brute-force re-checks equality on every run)
     sh = (
-        _corpus_pair_shingles(spark, sf_dir, spread=True)
+        _corpus_pair_shingles(spark, sf_dir)
         .select("doc_id", F.xxhash64("shingle").alias("shingle"))
         .localCheckpoint()
     )
@@ -1467,9 +1452,10 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily-ingest dedup: candidate pairs for a NEW batch of documents
     (doc_id % {mod} == 0 stands in for today's crawl) against the
     already-indexed corpus, via operators layered exactly as production
-    runs them -- band_signatures() persisted for the store (the corpus
-    text is never re-read or re-hashed on later days),
-    incremental_lsh_candidates() probing only the new batch.
+    runs them -- the corpus-wide band store (corpus_band_signatures,
+    filtered to the indexed docs; the corpus text is never re-read or
+    re-hashed on later days), incremental_lsh_candidates() probing
+    only the new batch.
 
     Scale shape: the candidate join keys on (band, sig); with the store
     bucketed on those keys each day's probe is shuffle-free on the
@@ -1486,18 +1472,12 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
     is_new = F.col("doc_id") % _INC_MOD == 0
-    # Under the batch-window fragment cache the store side reads the
-    # materialized corpus-wide band table (membership filter; per-doc
-    # pure) instead of re-hashing store text -- the literal production
-    # layout this query documents.  Standalone (cache off) keeps the
-    # member-scoped build.  The NEW batch's signatures are always
-    # computed from the batch text (that is the honest daily cost).
-    from .fragments import fragment_cache_on
-
-    if fragment_cache_on():
-        store_sigs = corpus_band_signatures(spark, sf_dir).filter(~is_new)
-    else:
-        store_sigs = band_signatures(docs.filter(~is_new))
+    # The store side is a membership filter over the corpus-wide band
+    # table (per-doc pure, so the filter commutes with the hash) -- the
+    # literal production layout this query documents.  The NEW batch's
+    # signatures are computed from the batch text (that is the honest
+    # daily cost).
+    store_sigs = corpus_band_signatures(spark, sf_dir).filter(~is_new)
     pairs, _new_sigs = incremental_lsh_candidates(
         store_sigs, docs.filter(is_new)
     )

@@ -572,7 +572,8 @@ def _clean_split_oracle() -> str:
 def corpus_clean_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end corpus hygiene step real training pipelines run
     before a single token is consumed: decontaminate against the
-    held-out eval source (plans/dedup.py::decontaminate_frame), then
+    held-out eval source (plans/dedup.py::decontaminate_eval_overlap's
+    probe of the corpus shingle store), then
     hash-split the survivors train/val/test -- with per-split
     accounting of what contamination removed, so a benchmark leak
     concentrated in one split is visible immediately.
@@ -586,23 +587,16 @@ def corpus_clean_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (once to shingle, once to split-count) -- at 100 TB the flagged
     ids land in a table between the passes, which is the checkpoint a
     multi-day ingest wants anyway."""
-    from .dedup import _EVAL_SOURCE, decontaminate_frame
-    from .fragments import fragment_cache_on
+    from .dedup import (
+        _EVAL_SOURCE,
+        corpus_doc_shingles,
+        decontaminate_from_store,
+    )
 
     d = read_table(spark, sf_dir, "documents")
     train = d.filter(F.col("source") != _EVAL_SOURCE)
-    if fragment_cache_on():
-        # batch-window path: contamination flags from the materialized
-        # shingle store (identical values; decontaminate_from_store)
-        from .dedup import corpus_doc_shingles, decontaminate_from_store
-
-        decon = decontaminate_from_store(corpus_doc_shingles(spark, sf_dir))
-    else:
-        decon = decontaminate_frame(
-            train, d.filter(F.col("source") == _EVAL_SOURCE)
-        )
     dropset = (
-        decon
+        decontaminate_from_store(corpus_doc_shingles(spark, sf_dir))
         .filter(F.col("is_contaminated"))
         .select("doc_id")
         .withColumn("dropped", F.lit(1))
@@ -1075,14 +1069,16 @@ def _disposition_oracle() -> str:
     )
 
 
-def _staged_features(d: DataFrame) -> DataFrame:
+def _staged_features(d: DataFrame, *extra: Column) -> DataFrame:
     """Per-document curation features (the ``staged`` projection of
     _disposition_chain, verbatim): token count, quality ratios,
-    normalized fingerprint, 60-bit content hash, split bucket.  Every
-    column is a pure function of the document row, so the projection
-    is snapshot-INDEPENDENT -- shared by _disposition_frame (full
-    corpus or a snapshot subset) and by release_delta_incremental's
-    persisted ledger + daily batch pass."""
+    normalized fingerprint, 60-bit content hash, split bucket, then
+    any ``extra`` per-doc columns.  Every column is a pure function of
+    the document row, so the projection is snapshot-INDEPENDENT --
+    shared by _disposition_frame (full corpus or a snapshot subset),
+    release_delta's union-corpus pass (``extra`` = its membership
+    flags) and release_delta_incremental's persisted ledger + daily
+    batch pass."""
     from .text import STOPWORDS
 
     toks = F.split(F.lower(F.col("text")), r"\s+")
@@ -1122,6 +1118,7 @@ def _staged_features(d: DataFrame) -> DataFrame:
         .cast("bigint")
         .alias("h"),
         hash_bucket(F.col("doc_id")).alias("bucket"),
+        *extra,
     )
 
 
@@ -1135,7 +1132,6 @@ from .fragments import (  # noqa: E402
     _FRAGMENT_CACHE,
     cache_key as _cache_key,
     fan_out,
-    fragment_cache_on as _fragment_cache_on,
     note_hit as _note_hit,
     note_miss as _note_miss,
 )
@@ -1211,10 +1207,10 @@ def _build_disposition_frame(
         .select(F.col("node").alias("doc_id"))
         .withColumn("is_near_dup", F.lit(True))
     )
-    if docs is None and _fragment_cache_on():
-        # batch-window path: decontamination probes the materialized
-        # shingle store instead of re-splitting text (identical
-        # values; decontaminate_from_store docstring)
+    if docs is None:
+        # the full corpus probes the corpus shingle store, as
+        # decontaminate_eval_overlap does; a snapshot override
+        # shingles its own documents
         from .dedup import corpus_doc_shingles, decontaminate_from_store
 
         cont_frame = decontaminate_from_store(
@@ -1277,11 +1273,11 @@ def corpus_disposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup drop set and the contamination set are tiny and broadcast
     back onto the corpus (dedup_apply / corpus_clean_split shapes),
     and the final pass is one narrow scan + a groupBy over at most 8
-    disposition rows.  The corpus is scanned three times (flags,
-    minhash signatures, decontamination shingles); at 100 TB the
-    shingle stream is computed once and checkpointed between the two
-    consumers, and each drop set lands in a table -- the natural
-    multi-day ingest checkpoints.  Stage precedence is explicit (a doc
+    disposition rows.  The minhash signatures and the decontamination
+    both read the corpus shingle store (dedup.corpus_doc_shingles);
+    with the fragment cache on it is materialized once for both, as
+    at 100 TB, where each drop set also lands in a table -- the
+    natural multi-day ingest checkpoints.  Stage precedence is explicit (a doc
     that is both a near-dup and contaminated counts once, as the
     earlier stage), so the numbers reconcile exactly with the
     stand-alone stage queries."""
@@ -1557,61 +1553,21 @@ def _membership_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     decided per row.)"""
     from pyspark.sql.window import Window
 
-    from .dedup import _DECON_THRESHOLD, _EVAL_SOURCE, minhash_pairs
+    from .dedup import (
+        _DECON_THRESHOLD,
+        _EVAL_SOURCE,
+        corpus_doc_shingles,
+        minhash_pairs,
+        store_shingles,
+    )
     from .graph import connected_components
-    from .text import STOPWORDS
 
-    d = read_table(spark, sf_dir, "documents")
+    _in_v1 = lambda c: _ib_of(c) < 14  # noqa: E731
+    _in_v2 = lambda c: _ib_of(c) != 13  # noqa: E731
 
-    def _in_v1(c: Column) -> Column:
-        return hash_bucket(F.concat(F.lit("ingest:"), c.cast("string"))) < 14
-
-    def _in_v2(c: Column) -> Column:
-        return (
-            hash_bucket(F.concat(F.lit("ingest:"), c.cast("string"))) != 13
-        )
-
-    # Scan 1: per-doc features + membership flags (identical
-    # expressions to _disposition_frame's staged projection).
-    toks = F.split(F.lower(F.col("text")), r"\s+")
-    staged = d.select(
-        "doc_id",
-        "source",
-        F.size(toks).alias("n_tokens"),
-        (
-            F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS))).cast(
-                "double"
-            )
-            / F.size(toks)
-        ).alias("stop_ratio"),
-        (
-            (
-                F.length("text")
-                - F.length(F.regexp_replace("text", "[^a-zA-Z0-9 ]", ""))
-            ).cast("double")
-            / F.length("text")
-        ).alias("punct_ratio"),
-        F.md5(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")).alias(
-            "norm_fp"
-        ),
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("doc_id").cast("string"),
-                        F.lit(":"),
-                        F.col("text"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("h"),
-        hash_bucket(F.col("doc_id")).alias("bucket"),
+    # Scan 1: per-doc features + membership flags.
+    staged = _staged_features(
+        read_table(spark, sf_dir, "documents"),
         _in_v1(F.col("doc_id")).alias("in_v1"),
         _in_v2(F.col("doc_id")).alias("in_v2"),
     )
@@ -1662,42 +1618,11 @@ def _membership_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scan 3: one per-doc-distinct shingle stream serves BOTH
     # snapshots' decontamination: each eval shingle is tagged with the
     # snapshots its eval docs belong to, and each train doc's two
-    # overlap counts are conditional counts in one aggregate.  Under
-    # the batch-window cache the stream is the materialized corpus
-    # shingle store exploded (identical rows; per-doc pure), removing
-    # this plan's third text scan.
-    if _fragment_cache_on():
-        from .dedup import corpus_doc_shingles
-
-        shflat = corpus_doc_shingles(spark, sf_dir).select(
-            "doc_id", "source", F.explode("sh").alias("shingle")
-        )
-    else:
-        shflat = (
-            d.select(
-                "doc_id",
-                "source",
-                F.split(F.lower(F.col("text")), r"\s+").alias("toks"),
-            )
-            .filter(F.size("toks") >= 3)
-            .select(
-                "doc_id",
-                "source",
-                F.explode(
-                    F.array_distinct(
-                        F.transform(
-                            F.sequence(F.lit(1), F.size("toks") - 2),
-                            lambda i: F.concat_ws(
-                                " ",
-                                F.element_at("toks", i),
-                                F.element_at("toks", i + 1),
-                                F.element_at("toks", i + 2),
-                            ),
-                        )
-                    )
-                ).alias("shingle"),
-            )
-        )
+    # overlap counts are conditional counts in one aggregate.  The
+    # stream is the corpus shingle store exploded (per-doc pure).
+    shflat = store_shingles(
+        corpus_doc_shingles(spark, sf_dir), "doc_id", "source"
+    )
     eval_hits = (
         shflat.filter(F.col("source") == _EVAL_SOURCE)
         .groupBy("shingle")
@@ -1830,31 +1755,6 @@ def _ib_of(c: Column) -> Column:
     return hash_bucket(F.concat(F.lit("ingest:"), c.cast("string")))
 
 
-def _doc_shingles(d: DataFrame) -> DataFrame:
-    """(doc_id, source, sh: array<string>) -- each document's DISTINCT
-    word-3-gram shingles as a per-row array; size(sh) equals
-    decontaminate_frame's n_shingles exactly (both are the distinct
-    count), so stored arrays re-score contamination bit-identically.
-    Composes dedup.word3_shingles -- the one shared shingle
-    definition (ADVICE r11: parity must be structural)."""
-    from .dedup import word3_shingles
-
-    toks = F.col("toks")
-    return (
-        d.select(
-            "doc_id",
-            "source",
-            F.split(F.lower(F.col("text")), r"\s+").alias("toks"),
-        )
-        .filter(F.size(toks) >= 3)
-        .select(
-            "doc_id",
-            "source",
-            F.array_distinct(word3_shingles(toks)).alias("sh"),
-        )
-    )
-
-
 def _quality_pass_col() -> Column:
     """The corpus_quality_funnel gate over the staged feature columns
     (a function, not a module constant: building a Column requires an
@@ -1938,96 +1838,46 @@ def _build_curation_state(spark: SparkSession, sf_dir: str, member_of) -> dict:
     from ..operators.table_format import SnapshotSet
     from .dedup import (
         _EVAL_SOURCE,
-        band_signatures,
-        decontaminate_frame,
+        corpus_band_signatures,
+        corpus_doc_shingles,
+        decontaminate_from_store,
+        minhash_pairs,
     )
     from .graph import connected_components
     from .warehouse import _scratch_dir
 
-    d = read_table(spark, sf_dir, "documents")
-    v1 = d.filter(member_of(F.col("doc_id")))
-
-    staged = _staged_features(v1)
-    # Band signatures computed ONCE and checkpointed: the pair join,
-    # the committed band store, and (transitively) the CC all reuse
-    # the one minhash pass instead of re-hashing text per consumer.
-    # Under the batch-window fragment cache the snapshot's signatures
-    # are a MEMBERSHIP FILTER over the materialized full-corpus band
-    # store (per-doc pure, so the filter commutes with the hash) --
-    # the production layout, where dedup_incremental maintains ONE
-    # corpus-wide band table and a snapshot build probes it instead
-    # of re-hashing text (VERDICT r10 #2: build each fragment once
-    # per cold pass; measured -5.4 s at sf0.1).  Value parity
-    # cache-on == cache-off is pinned (test_fragment_cache_parity +
-    # the evolution==rebuild pins, which compare across both paths).
-    if _fragment_cache_on():
-        from .dedup import (
-            corpus_band_signatures,
-            corpus_doc_shingles,
-            minhash_pairs,
-        )
-
-        sigs = (
-            corpus_band_signatures(spark, sf_dir)
-            .filter(member_of(F.col("doc_id")))
-            .localCheckpoint()
-        )
-        # a within-snapshot candidate pair is exactly a corpus pair
-        # with both endpoints in the snapshot (signatures are per-doc
-        # pure) -- the _membership_changes argument, applied to the
-        # materialized corpus pair fragment
-        pairs = (
-            minhash_pairs(spark, sf_dir)
-            .select("doc_a", "doc_b")
-            .filter(
-                member_of(F.col("doc_a")) & member_of(F.col("doc_b"))
-            )
-            .localCheckpoint()
-        )
-    else:
-        sigs = band_signatures(
-            v1.repartition(spark.sparkContext.defaultParallelism)
-        ).localCheckpoint()
-        a, b = sigs.alias("a"), sigs.alias("b")
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.sig") == F.col("b.sig"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .distinct()
-            .localCheckpoint()
-        )
+    member = member_of(F.col("doc_id"))
+    staged = _staged_features(
+        read_table(spark, sf_dir, "documents").filter(member)
+    )
+    # Every per-doc store of the snapshot is a MEMBERSHIP FILTER over
+    # the corpus-wide fragment (per-doc pure, so the filter commutes
+    # with the hash and the shingling) -- the production layout, where
+    # dedup_incremental maintains ONE corpus-wide band table and a
+    # snapshot build probes it instead of re-hashing text.  The band
+    # store and the pair set are checkpointed once: the committed
+    # stores and the CC all reuse them.
+    sigs = (
+        corpus_band_signatures(spark, sf_dir).filter(member).localCheckpoint()
+    )
+    # a within-snapshot candidate pair is exactly a corpus pair with
+    # both endpoints in the snapshot (signatures are per-doc pure) --
+    # the _membership_changes argument
+    pairs = (
+        minhash_pairs(spark, sf_dir)
+        .select("doc_a", "doc_b")
+        .filter(member_of(F.col("doc_a")) & member_of(F.col("doc_b")))
+        .localCheckpoint()
+    )
     comp = connected_components(pairs, "doc_a", "doc_b").select(
         F.col("node").alias("doc_id"), "cluster_id"
     )
     nd = comp.filter(F.col("doc_id") != F.col("cluster_id")).select(
         "doc_id", F.lit(True).alias("is_near_dup")
     )
-    # The snapshot's doc-keyed shingle store: a membership filter over
-    # the materialized corpus shingle fragment under the batch-window
-    # cache (per-doc pure, same commute argument as the band store);
-    # the standalone text-scan derivation otherwise.  Decontamination
-    # probes the same store either way (identical values --
-    # decontaminate_from_store docstring).
-    if _fragment_cache_on():
-        from .dedup import corpus_doc_shingles, decontaminate_from_store
-
-        snap_doc_sh = corpus_doc_shingles(spark, sf_dir).filter(
-            member_of(F.col("doc_id"))
-        )
-        cont_frame = decontaminate_from_store(snap_doc_sh)
-    else:
-        snap_doc_sh = _doc_shingles(v1)
-        cont_frame = decontaminate_frame(
-            v1.filter(F.col("source") != _EVAL_SOURCE),
-            v1.filter(F.col("source") == _EVAL_SOURCE),
-        )
+    # the snapshot's doc-keyed shingle store; decontamination probes it
+    snap_doc_sh = corpus_doc_shingles(spark, sf_dir).filter(member)
+    cont_frame = decontaminate_from_store(snap_doc_sh)
     cont = cont_frame.select("doc_id", "n_overlap", "is_contaminated")
 
     w = Window.partitionBy("norm_fp")
@@ -2183,7 +2033,12 @@ def _incremental_day_frames(
     zero-documents-scan pin (tests/test_round9_ops.py) proves the
     pass reads no corpus text when the batch is handed in
     materialized."""
-    from .dedup import _DECON_THRESHOLD, _EVAL_SOURCE, incremental_lsh_candidates
+    from .dedup import (
+        _DECON_THRESHOLD,
+        _EVAL_SOURCE,
+        doc_shingles,
+        incremental_lsh_candidates,
+    )
     from .graph import connected_components
 
     if removed_of is None:
@@ -2269,7 +2124,7 @@ def _incremental_day_frames(
     )
 
     # --- decontamination gate: eval-shingle delta -> hit docs ------------
-    new_sh = _doc_shingles(new_docs).localCheckpoint(eager=False)
+    new_sh = doc_shingles(new_docs).localCheckpoint(eager=False)
     rem_sh = (
         state["doc_sh"]
         .join(

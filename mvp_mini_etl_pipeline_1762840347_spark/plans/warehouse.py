@@ -3118,8 +3118,10 @@ def advisor_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             # a short job whose tail would otherwise leave the cores
             # idle while the next build waits on the driver).  Each
             # member fills a DIFFERENT fragment key, so the per-process
-            # cache sees no key contention; with the cache off the
-            # standalone plan below is returned unchanged.
+            # cache sees no key contention.  This check picks no
+            # derivation: the prefill is itself a materialization, and
+            # with the cache off there is nothing to keep, so the
+            # report below composes the same advisor plans lazily.
             advisors = (
                 encoding_advisor,
                 partition_advisor,

@@ -163,7 +163,11 @@ def test_fragment_cache_parity(spark):
     (curation-state memo + daily-pass fragment), graph_triangle_count
     (co-purchase edge fragment), dedup_containment (corpus doc-shingle
     store), dedup_simhash_hamming (simhash fingerprint fragment), and
-    corpus_clean_split (store-derived drop set + band signatures)."""
+    corpus_clean_split (store-derived drop set + band signatures).  The
+    remaining consumers of the shingle store and the band signatures
+    (decontaminate_eval_overlap, dedup_incremental, release_delta,
+    dedup_lsh_recall, dedup_minhash_lsh) pin that the one derivation
+    gives the same rows materialized and served as composed lazily."""
     import os
 
     from mvp_mini_etl_pipeline_1762840347_spark.plans import quality
@@ -175,6 +179,11 @@ def test_fragment_cache_parity(spark):
         "dedup_containment",
         "dedup_simhash_hamming",
         "corpus_clean_split",
+        "decontaminate_eval_overlap",
+        "dedup_incremental",
+        "release_delta",
+        "dedup_lsh_recall",
+        "dedup_minhash_lsh",
     )
     cold = {n: _rows(plans.QUERIES[n](spark, SF)) for n in names}
     quality._FRAGMENT_CACHE.clear()
